@@ -132,13 +132,13 @@ HEADLINE = [
 # Box-drift thermometers, grouped by PLAN SHAPE (r10): every entry reads
 # its input fresh each iteration (parquet scan, or spark.range for the
 # generated thermo_* pair) and touches NO cross-query memoized state
-# (graph.py's persisted edge relation, similarity's localCheckpointed
-# signed relation / dim memo). Only these feed normalization medians;
+# (similarity's dim memo). Only these feed normalization medians;
 # everything else is normalized BY them but cannot drag them. Excluded
-# and why: g3/g4 (memoized edge relation — min-of-N measures warm
-# cache), d2/sim1/sim6/c1 (shared pipeline infrastructure that rounds
-# routinely touch indirectly), cdc1 (window-shaped but memo-adjacent
-# SCD2 chain — w2/e3/thermo cover the shape without it).
+# and why: g3/g4 (graph operators that rounds routinely rework; their
+# min-of-N measures the per-call edge derivation since r15),
+# d2/sim1/sim6/c1 (shared pipeline infrastructure that rounds
+# routinely touch indirectly), cdc1 (window-shaped SCD2 chain —
+# w2/e3/thermo cover the shape without it).
 CAL_SHAPES = {
     "scan_join_agg": [
         "flagship_star_agg",
@@ -367,7 +367,7 @@ SHAPE_DIVERGENCE_GATE = 0.20
 # exonerated; the penalty reproduces with any ~50-execution prefix and
 # without the memoized graph relations). The steady state is the
 # plan-quality signal this artifact exists to track, so sim6 warms in
-# explicitly; the same precedent as the g1-g6 warm-cache note above.
+# explicitly.
 # COMPARABILITY: r12+ sim6 numbers are steady-state and comparable to
 # r9-r11 BUILDER readings, not to the r9-r11 driver-run transients.
 WARM_IN = {"sim6_knn_graph": 8}
@@ -375,10 +375,13 @@ WARM_IN = {"sim6_knn_graph": 8}
 # Measurement-basis facts a cross-round reader needs (shipped in the
 # output so the caveat lives WITH the numbers, not in a round's memo):
 NOTES = [
-    "g1-g6 (incl. headline g3/g4) share a per-corpus memoized persisted"
-    " edge relation since r7 (operators/graph.py): min-of-N times measure"
-    " the warm-cache steady state, so graph-query comparisons against"
-    " pre-r7 rounds conflate caching with operator changes.",
+    "g1-g6 (incl. headline g3/g4): the per-corpus persisted edge"
+    " relation they shared from r7 to r14 is REMOVED in r15 — every call"
+    " derives the edge list from the orders scan, so min-of-N times"
+    " measure the per-call derivation, not a warm cache. The one-time"
+    " raw uptick vs r7-r14 (g4 0.56 -> 0.85 s in a same-JVM probe) is"
+    " the memo's removal, not a plan regression; comparisons against"
+    " pre-r7 rounds are like-for-like again.",
     "normalization is PER SHAPE CLASS since r10: each headline query"
     " divides by the median ratio of its SHAPE_OF class"
     " (calibration.shape_of names the class per query;"

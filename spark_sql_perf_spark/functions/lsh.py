@@ -12,6 +12,7 @@ cycle.
 
 from __future__ import annotations
 
+import math
 from typing import NamedTuple
 
 from pyspark.sql import functions as F
@@ -143,6 +144,15 @@ def sign_lsh_sig_sql(nbits: int = LSH_BITS, lo: int = 0) -> str:
     return " + ".join(_plane_sign_sql(b) for b in range(lo, lo + nbits))
 
 
+def sql_double(v: float) -> str:
+    """``v`` as a Spark SQL double literal. ``repr`` round-trips every
+    finite float exactly; nan and inf have no literal form (``nanD``
+    would fail to parse far from here), so they are refused now."""
+    if not math.isfinite(v):
+        raise ValueError(f"non-finite value {v!r} has no SQL double literal")
+    return f"{v!r}D"
+
+
 def _plane_value(bit: int, i: int) -> float:
     """Python twin of the md5-derived plane component (i is 1-based, as
     in the SQL ``range``/``sequence`` forms): bit-identical to what the
@@ -185,10 +195,10 @@ def _plane_sign_spark_lit(bit: int, dim: int, unroll: bool = False) -> F.Column:
     vals = [_plane_value(bit, i) for i in range(1, dim + 1)]
     if unroll and dim <= _PLANE_UNROLL_MAX_DIM:
         proj = F.expr(
-            " + ".join(f"(v[{i}] * {v!r}D)" for i, v in enumerate(vals))
+            " + ".join(f"(v[{i}] * {sql_double(v)})" for i, v in enumerate(vals))
         )
     else:
-        plane = F.expr("array(" + ",".join(f"{v!r}D" for v in vals) + ")")
+        plane = F.expr("array(" + ",".join(map(sql_double, vals)) + ")")
         proj = F.aggregate(
             F.zip_with(F.col("v"), plane, lambda a, b: a * b),
             F.lit(0.0),

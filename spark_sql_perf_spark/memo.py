@@ -1,98 +1,63 @@
-"""Registry of cached-DataFrame evictors for module-level memos.
+"""The one lifetime rule for materialized intermediates.
 
-A few operators register cached DataFrames here
-(``operators.windows2._RANK_CACHED``, ``operators.graph._EDGE_MEMO``,
-``pipeline.curation._PACK_CACHED``) — per-invocation correctness caches
-for the two-pass rank/cumsum helpers, plus the graph queries' shared
-input edge relation.
-Each memo module registers an evictor here at import time; the
-``ExperimentRunner`` calls :func:`evict_all` in its per-iteration
-cleanup and teardown so a suite run that *ends* on a memoized query
-does not leave executor storage pinned — and so the memo dicts stay
-coherent with ``spark.catalog.clearCache()`` (a memo entry whose
-underlying blocks were cleared would silently recompute on reuse).
+Every library materialization is :func:`materialize` — a tracked
+``localCheckpoint`` — and is freed either by :func:`release`, when the
+code that made it is done with it, or by :func:`release_all`, which
+``ExperimentRunner`` calls at each iteration boundary (untracked blocks
+would otherwise wait for driver GC).
+
+Caveat: a checkpointed frame has no lineage, so a frame held across
+``release_all`` (or its own ``release``) cannot be re-executed.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from pyspark import SparkContext
+from pyspark.sql import DataFrame
 
-_EVICTORS: list[Callable[[], None]] = []
+# (context, RDD id) of every materialized frame not yet released. Ids
+# only: a JVM reference would keep the RDD reachable and stop Spark's
+# ContextCleaner from freeing it when the frame is garbage-collected.
+_TRACKED: set[tuple[SparkContext, int]] = set()
 
 
-def register_evictor(fn: Callable[[], None]) -> None:
-    """Register a zero-arg callback that unpersists a module memo."""
-    _EVICTORS.append(fn)
+def _rdd(df: DataFrame):
+    # a checkpointed frame's analyzed plan is a LogicalRDD wrapping the
+    # RDD that localCheckpoint marked persistent
+    return df._jdf.queryExecution().analyzed().rdd()
 
 
-def evict_all() -> None:
-    """Run every registered evictor; never raises (teardown path)."""
-    for fn in _EVICTORS:
+def materialize(df: DataFrame, eager: bool) -> DataFrame:
+    """``df.localCheckpoint(eager)``, tracked for release."""
+    out = df.localCheckpoint(eager=eager)
+    _TRACKED.add((out.sparkSession.sparkContext, _rdd(out).id()))
+    return out
+
+
+def release(*frames: DataFrame | None) -> None:
+    """Unpersist and untrack these materialized frames now. Anything
+    else (``None``, a frame :func:`materialize` did not return, one
+    already released) is skipped; never raises (``finally`` path)."""
+    for df in frames:
+        if df is None:
+            continue
         try:
-            fn()
+            rdd = _rdd(df)
+            key = (df.sparkSession.sparkContext, rdd.id())
+            if key in _TRACKED:
+                _TRACKED.discard(key)
+                rdd.unpersist(False)
         except Exception:
             pass
 
 
-# (SparkContext, rdd_id) pairs materialized by local_checkpoint_tracked.
-_CHECKPOINT_RDDS: list[tuple[object, int]] = []
-
-
-def _evict_checkpoints() -> None:
-    while _CHECKPOINT_RDDS:
-        sc, rid = _CHECKPOINT_RDDS.pop()
+def release_all() -> None:
+    """Unpersist every tracked frame; never raises (teardown path)."""
+    while _TRACKED:
+        sc, rid = _TRACKED.pop()
         try:
             jmap = sc._jsc.getPersistentRDDs()
             if jmap.containsKey(rid):
                 jmap.get(rid).unpersist(False)
         except Exception:
             pass
-
-
-register_evictor(_evict_checkpoints)
-
-
-def local_checkpoint_tracked(df):
-    """``df.localCheckpoint(eager=True)`` with the materialized RDD id
-    registered for deterministic release: checkpoint blocks otherwise
-    live on executors until driver GC drops the last DataFrame reference
-    — a slow storage accumulation across a bench min-of-N loop that
-    rebuilds the checkpoint every iteration (the d9 losing relation).
-    ``evict_all`` (ExperimentRunner per-iteration cleanup/teardown)
-    unpersists the tracked RDDs directly via the JVM persistent-RDD map.
-
-    Caveat (same contract as every module memo here): a checkpointed
-    frame has NO lineage to recompute from, so a DataFrame held across
-    an evict_all and re-executed fails on missing blocks — callers
-    build per-invocation frames, which is the pattern every current
-    call site follows.
-
-    The tracked id is derived FROM the returned frame — a checkpointed
-    Dataset's analyzed plan is a ``LogicalRDD`` wrapping exactly the
-    RDD ``localCheckpoint`` persisted, so ``analyzed().rdd().id()`` is
-    its storage id. The original before/after diff of the JVM
-    persistent-RDD map would also capture any RDD persisted
-    concurrently in the window (another thread, an in-flight streaming
-    batch) and later force-unpersist it in ``evict_all`` (r10 ADVICE).
-    The diff survives only as the assertion-free fallback for a future
-    Spark that changes the checkpoint plan shape.
-
-    Adoption boundary, deliberate: the d9/c14 excision checkpoints use
-    this; the OTHER localCheckpoint sites (g3/g4 support pairs, the
-    sim6/d5/sim7 signed relation, the streaming ANN probe frame) keep
-    the documented GC-based lifetime — wrapping them buys only earlier
-    teardown cleanup while flagging six-plus oracle queries for
-    re-verification (the rotation treats any touched executed path as
-    changed), and the streaming probe frame may belong to an in-flight
-    batch at eviction time."""
-    sc = df.sparkSession.sparkContext
-    before = {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
-    out = df.localCheckpoint(eager=True)
-    try:
-        _CHECKPOINT_RDDS.append(
-            (sc, int(out._jdf.queryExecution().analyzed().rdd().id()))
-        )
-    except Exception:
-        for rid in {int(k) for k in sc._jsc.getPersistentRDDs().keySet()} - before:
-            _CHECKPOINT_RDDS.append((sc, rid))
-    return out

@@ -69,7 +69,7 @@ def l2_distribute_sort_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Derived on-disk layouts. Built once per (layout, sf_dir) per process in a
 # scratch dir removed at exit; a bench min-of-N loop re-reads the layout, it
-# does not rewrite it. Disk-only (no Spark cache), so no memo evictor needed.
+# does not rewrite it. Disk-only: no executor storage to release.
 # ---------------------------------------------------------------------------
 
 _LAYOUT_DIRS: dict[tuple[str, str], str] = {}

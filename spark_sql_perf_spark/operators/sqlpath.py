@@ -133,9 +133,9 @@ _CTE_SQL = """
 def sql6_materialized_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-branch WITH executed through ``plans.cte.materialize_ctes``
     (the q14a/q23/q24/q64 scale mode): the shared ``co`` aggregation is
-    cached and registered as a view, so both consuming branches (grand
-    totals + the 1.5x-of-average filter) read it from memory instead of
-    re-running the orders aggregation per branch — Spark's inlined-CTE
+    materialized and registered as a view, so both consuming branches
+    (grand totals + the 1.5x-of-average filter) read its blocks instead
+    of re-running the orders aggregation per branch — Spark's inlined-CTE
     plan scans orders once per reference. Results are identical to the
     plain WITH (the oracle runs the uninlined text); only the execution
     count of the CTE body drops. Exact-decimal spend and a cross-
@@ -184,5 +184,9 @@ def sql7_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration shuffle profile as g6's PageRank steps."""
     from .graph import edge_table
 
-    edge_table(spark, sf_dir).createOrReplaceTempView("g")
-    return spark.sql(_RCTE_BODY)
+    # {g}: pyspark binds the frame to a generated temp view and drops it
+    # once the body is analyzed, so the session's catalog is untouched
+    return spark.sql(
+        _RCTE_BODY.replace("JOIN g ON", "JOIN {g} g ON", 1),
+        g=edge_table(spark, sf_dir),
+    )

@@ -3444,7 +3444,7 @@ def register_tpcds14(spark: SparkSession, scale: float = 0.01, seed: str = "100"
 
 def run_materialized(spark: SparkSession, name: str):
     """Scale-mode execution of a multi-branch WITH query: shared CTEs
-    cached and executed once (see ``plans.cte``). Same results as
+    materialized and executed once (see ``plans.cte``). Same results as
     ``spark.sql(TPCDS14_QUERIES[name])``, minus the per-branch CTE
     re-execution that dominates at 100x scale."""
     from ..plans.cte import materialize_ctes
@@ -3456,7 +3456,7 @@ def run_materialized(spark: SparkSession, name: str):
 
 def tpcds14_queries(materialize_shared: bool = False) -> list[Query]:
     """Suite Query objects; ``materialize_shared`` switches the
-    multi-branch WITH queries to the cached-CTE scale mode."""
+    multi-branch WITH queries to the materialized-CTE scale mode."""
     out = []
     for n, sql in TPCDS14_QUERIES.items():
         if materialize_shared and n in TPCDS14_SHARED_CTES:

@@ -14,23 +14,6 @@ from .. import memo
 from ..catalog import table
 from .registry import dec, query
 
-# bounded cache registry for the two-pass rank (same lifetime pattern as
-# pipeline.dedup: drop the previous invocation's frames on each call; a
-# run that ENDS on a ranked query is drained by the registered evictor,
-# which ExperimentRunner calls in its teardown)
-_RANK_CACHED: list[DataFrame] = []
-
-
-def _evict_rank_cache() -> None:
-    while _RANK_CACHED:
-        try:
-            _RANK_CACHED.pop().unpersist(blocking=False)
-        except Exception:
-            pass
-
-
-memo.register_evictor(_evict_rank_cache)
-
 
 def _with_global_rank(
     df: DataFrame, order: list[Column], n_parts: int = 32
@@ -45,19 +28,19 @@ def _with_global_rank(
     order must be total (include a unique tiebreak column) for the result
     to be deterministic.
 
+    The range-partitioned frame is materialized before the counts job:
+    ``repartitionByRange`` samples its boundaries nondeterministically,
+    so a re-executed plan could place rows in other partitions than
+    the ones the offsets were computed for.
+
     Returns (df with ``_rank``, total row count).
     """
-    while _RANK_CACHED:
-        try:
-            _RANK_CACHED.pop().unpersist(blocking=False)
-        except Exception:
-            pass
-    parted = (
-        df.repartitionByRange(n_parts, *order)
-        .withColumn("_pid", F.spark_partition_id())
-        .cache()
+    parted = memo.materialize(
+        df.repartitionByRange(n_parts, *order).withColumn(
+            "_pid", F.spark_partition_id()
+        ),
+        eager=False,
     )
-    _RANK_CACHED.append(parted)
     counts = {r["_pid"]: r["count"] for r in parted.groupBy("_pid").count().collect()}
     total = sum(counts.values())
     offsets: dict[int, int] = {}

@@ -424,24 +424,8 @@ def c5_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 _C6_BUDGET = 512
 _C6_N_PARTS = 16
 
-# same bounded-memo lifetime pattern as windows2._RANK_CACHED
-_PACK_CACHED: list[DataFrame] = []
-
-
-def _evict_pack_cache() -> None:
-    while _PACK_CACHED:
-        try:
-            _PACK_CACHED.pop().unpersist(blocking=False)
-        except Exception:
-            pass
-
-
-memo.register_evictor(_evict_pack_cache)
-
-
 def global_cum_before(
-    df: DataFrame, order_col: str, val_col: str, n_parts: int,
-    evict: bool = True,
+    df: DataFrame, order_col: str, val_col: str, n_parts: int
 ) -> DataFrame:
     """Scale-safe GLOBAL exclusive running sum of ``val_col`` in
     ``order_col`` order: returns ``df`` plus a ``cum_before`` column.
@@ -449,27 +433,17 @@ def global_cum_before(
     The windows2 two-pass scheme: range shuffle on the order column,
     per-partition totals to the driver (n_parts rows), broadcast
     offsets, partition-local window. The range-partitioned frame MUST
-    be cached before the offsets job — ``repartitionByRange`` samples
-    its boundaries with a nondeterministic seed, so an uncached plan
+    be materialized before the offsets job — ``repartitionByRange``
+    samples its boundaries with a nondeterministic seed, so a plan
     re-executed for the window pass can land rows in different
     partitions than the ones the offsets were computed for.
-
-    The cached frame is registered in the module memo (drained by
-    ``ExperimentRunner`` teardown via ``memo.evict_all``). Pass
-    ``evict=False`` when composing with another two-pass cumsum in the
-    same plan (c13): evicting here would uncache the earlier stage's
-    range-partitioned frame while the final plan still reads it, and an
-    uncached repartitionByRange re-samples its boundaries — rows land in
-    partitions the collected offsets were not computed for.
     """
-    if evict:
-        _evict_pack_cache()
-    parted = (
-        df.repartitionByRange(n_parts, F.col(order_col))
-        .withColumn("_pid", F.spark_partition_id())
-        .cache()
+    parted = memo.materialize(
+        df.repartitionByRange(n_parts, F.col(order_col)).withColumn(
+            "_pid", F.spark_partition_id()
+        ),
+        eager=False,
     )
-    _PACK_CACHED.append(parted)
     sums = {
         r["_pid"]: r["s"]
         for r in parted.groupBy("_pid")
@@ -935,7 +909,6 @@ def grouped_cum_before(
     order_key: list[Column],
     val_col: str,
     n_parts: int,
-    evict: bool = True,
 ) -> DataFrame:
     """PER-GROUP exclusive running sum of ``val_col`` in ``order_key``
     order — the grouped generalization of ``global_cum_before``. A bare
@@ -945,12 +918,8 @@ def grouped_cum_before(
     partitions as its volume needs, the offsets job collects one row
     per (partition, group) — O(n_parts x |groups|), domains are
     bounded (10s-1000s) while docs are not — and the window is
-    partition-local. Same cache-before-offsets discipline as
-    global_cum_before (repartitionByRange samples nondeterministically),
-    and the same ``evict=False`` escape hatch for composing as a
-    non-first cumsum stage (evicting mid-composition would uncache an
-    earlier stage's range-partitioned frame while the final plan still
-    reads it).
+    partition-local. Same materialize-before-offsets discipline as
+    global_cum_before (repartitionByRange samples nondeterministically).
 
     The offsets go back executor-side as a BROADCAST-JOINED frame keyed
     on (partition id, group), not a literal ``create_map``: Catalyst
@@ -960,14 +929,12 @@ def grouped_cum_before(
     scan per output row baked into the plan text. A broadcast hash join
     is O(1) per row and keeps the plan size flat.
     """
-    if evict:
-        _evict_pack_cache()
-    parted = (
-        df.repartitionByRange(n_parts, F.col(group_col), *order_key)
-        .withColumn("_pid", F.spark_partition_id())
-        .cache()
+    parted = memo.materialize(
+        df.repartitionByRange(n_parts, F.col(group_col), *order_key).withColumn(
+            "_pid", F.spark_partition_id()
+        ),
+        eager=False,
     )
-    _PACK_CACHED.append(parted)
     # coalesce: an all-null (partition, group) cell yields SUM = NULL,
     # which would TypeError in the offsets accumulation below — current
     # callers derive val_col from size() and never pass nulls, but the
@@ -1142,15 +1109,9 @@ def c13_e2e_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumes.
 
     100 TB design: the three stages chain without materializing between
-    them — the budget stage's range-partitioned cache feeds the explode
+    them — the budget stage's range-partitioned frame feeds the explode
     directly, and the only driver work is the two offsets jobs
-    (O(partitions x domains) and O(partitions)). The packing stage's
-    ``global_cum_before`` runs with ``evict=False``: evicting the memo
-    mid-composition would uncache the budget stage's range-partitioned
-    frame while the final plan still reads it, and an uncached
-    ``repartitionByRange`` re-samples boundaries nondeterministically —
-    rows would land in partitions the collected offsets were not
-    computed for (the exact failure the helper's docstring pins).
+    (O(partitions x domains) and O(partitions)).
     """
     c = _c12_ranked(table(spark, sf_dir, "documents"))
     kept = c.where((F.col("cum_before") + F.col("tok")) <= _C12_BUDGET)
@@ -1163,7 +1124,7 @@ def c13_e2e_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("epoch"),
     ).withColumn("ord", F.col("doc_id") * _C13_STRIDE + F.col("epoch"))
 
-    packed = global_cum_before(emitted, "ord", "tok", _C6_N_PARTS, evict=False)
+    packed = global_cum_before(emitted, "ord", "tok", _C6_N_PARTS)
     return packed.groupBy(
         F.floor(F.col("cum_before") / _C13_PACK).alias("context_id")
     ).agg(
@@ -1305,8 +1266,9 @@ def c14_dedup_excise_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") == 1)
         .drop("rn")
     )
-    words = memo.local_checkpoint_tracked(
-        uniq.select("doc_id", "source", F.split("text", " ").alias("ws"))
+    words = memo.materialize(
+        uniq.select("doc_id", "source", F.split("text", " ").alias("ws")),
+        eager=True,
     )
     # covered_word_sets applies the size(ws) >= k guard itself (r10
     # ADVICE made the precondition internal)

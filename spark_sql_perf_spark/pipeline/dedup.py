@@ -221,11 +221,11 @@ def d2_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Nothing is reused across invocations: a bench min-of-N loop or an
     # oracle sweep pays the full shingle->minhash recomputation each
     # sample (the r13 verdict retired the former cross-call memo here).
-    hashed = (
+    hashed = memo.materialize(
         _shingles_df(_fan_out(corpus, key="doc_id"))
         .select("doc_id", (md5_hash32("sh", "mh") % _P).alias("h"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=False,
     )
     perms = hashed.select(
         "doc_id",
@@ -234,10 +234,13 @@ def d2_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j, (a, b) in enumerate(_PERM)
         ],
     )
-    sigs = perms.groupBy("doc_id").agg(
-        *[F.min(f"h{j}").alias(f"m{j}") for j in range(_N_HASHES)],
-        F.count(F.lit(1)).alias("n_sh"),
-    ).localCheckpoint()
+    sigs = memo.materialize(
+        perms.groupBy("doc_id").agg(
+            *[F.min(f"h{j}").alias(f"m{j}") for j in range(_N_HASHES)],
+            F.count(F.lit(1)).alias("n_sh"),
+        ),
+        eager=False,
+    )
     # one row per (doc, band) via explode — a union would recompute the
     # signature aggregation once per band.
     band_structs = F.array(
@@ -350,16 +353,19 @@ def d6_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    edges = edges.localCheckpoint(eager=True)
+    edges = memo.materialize(edges, eager=True)
     docs = _corpus(spark, sf_dir, suffix="planted near duplicate suffix").select(
         "doc_id"
     )
     labels = docs.select("doc_id", F.col("doc_id").alias("lbl"))
-    prev_sum = None
+    prev_sum = prev = None
     for _ in range(30):  # >= any plausible component diameter
-        labels = labels.localCheckpoint(eager=True)
+        labels = memo.materialize(labels, eager=True)
+        memo.release(prev)  # superseded: the new labels are computed
+        prev = labels
         cur_sum = labels.agg(F.sum("lbl")).collect()[0][0]
         if cur_sum == prev_sum:
+            memo.release(edges)  # the returned labels no longer read it
             break
         prev_sum = cur_sum
         nbr_min = (
@@ -1026,7 +1032,7 @@ def covered_word_sets(words: DataFrame, k: int = _D8_K) -> DataFrame:
     from pyspark.sql import Window
 
     by_h = Window.partitionBy("h")
-    losing = memo.local_checkpoint_tracked(
+    losing = memo.materialize(
         # The losing relation feeds both the covered-word explode and,
         # through it, every downstream consumer; without the checkpoint
         # each consumer re-executes the full 20n-row digest-window
@@ -1034,8 +1040,7 @@ def covered_word_sets(words: DataFrame, k: int = _D8_K) -> DataFrame:
         # cell. localCheckpoint runs it once; the materialized frame is
         # skinny (doc, pos) and bounded by DUPLICATED volume, not corpus
         # size. Same lineage-truncation trade as g3's support pairs
-        # (operators/graph.py:405); tracked so ExperimentRunner teardown
-        # frees the blocks instead of waiting on driver GC (r9 ADVICE).
+        # (operators/graph.py:405).
         hashed.select(
             "doc_id",
             "pos",
@@ -1043,7 +1048,8 @@ def covered_word_sets(words: DataFrame, k: int = _D8_K) -> DataFrame:
             F.max("doc_id").over(by_h).alias("hi"),
         )
         .where((F.col("lo") != F.col("hi")) & (F.col("lo") < F.col("doc_id")))
-        .select("doc_id", "pos")
+        .select("doc_id", "pos"),
+        eager=True,
     )
     return (
         losing.select(
@@ -1182,8 +1188,8 @@ def _minhash_frames_materialized(
     the at-rest production layout, where the index relations are
     parquet, computed once (guide §1.2: don't compute things twice;
     §3.3: materialize an intermediate consumed by several joins)."""
-    hashed = _minhash_hashed(_fan_out(corpus)).localCheckpoint()
-    sigs = _sigs_from_hashed(hashed).localCheckpoint()
+    hashed = memo.materialize(_minhash_hashed(_fan_out(corpus)), eager=False)
+    sigs = memo.materialize(_sigs_from_hashed(hashed), eager=False)
     return hashed, sigs, _bands_from_sigs(sigs)
 
 

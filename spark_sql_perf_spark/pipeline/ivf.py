@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..catalog import table
 from ..operators.registry import query
 
@@ -242,10 +243,11 @@ def kmeans_centroids(
     # the scan + normalization + vector conversion on every one of the
     # 10 iterations (guide §4.5/§5 — heavyweight input computed once).
     # Identical rows in, identical fixed-seed fit out.
-    train = vecs.select(
-        array_to_vector(F.col("v")).alias("features")
-    ).localCheckpoint()
+    train = memo.materialize(
+        vecs.select(array_to_vector(F.col("v")).alias("features")), eager=False
+    )
     model = KMeans(k=k, seed=seed, maxIter=10).fit(train)
+    memo.release(train)
     centers = [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
@@ -320,7 +322,7 @@ def sql_lloyd_centroids(
     # nested plan also codegen-compiles as one unit (r14; the g6
     # per-iteration-checkpoint precedent). Values are the exact computed
     # rows, so results are bit-identical.
-    return cents.localCheckpoint()
+    return memo.materialize(cents, eager=False)
 
 
 def _dd_dist(vcol: str, ccol: str) -> str:

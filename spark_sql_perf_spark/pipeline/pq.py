@@ -46,7 +46,9 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..catalog import table
+from ..functions.lsh import sql_double
 from ..operators.registry import query
 
 M_SUB = 32      # sub-spaces
@@ -96,7 +98,8 @@ def _dm_col(m: int, cb_m: list[tuple[float, float]]) -> F.Column:
     codebook components round-trips exactly, so the parsed literals,
     the expression tree, and therefore the results are bit-identical."""
     pairs = ",".join(
-        f"named_struct('a',{c0!r}D,'b',{c1!r}D)" for c0, c1 in cb_m
+        f"named_struct('a',{sql_double(c0)},'b',{sql_double(c1)})"
+        for c0, c1 in cb_m
     )
     v1 = f"element_at(v, {m * D_SUB + 1})"
     v2 = f"element_at(v, {m * D_SUB + 2})"
@@ -250,7 +253,7 @@ def sim5_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~0.5 MiB of generated code compiled twice per invocation;
     # checkpointing computes (and compiles) it once — measured -12%
     # interleaved at sf0.01, results identical.
-    dists = _dist_arrays(vecs).drop("v").localCheckpoint()
+    dists = memo.materialize(_dist_arrays(vecs).drop("v"), eager=False)
     q = dists.where(F.col("vec_id") < _N_QUERIES)
     codes = pq_codes(dists.where(F.col("vec_id") >= _N_QUERIES))
     rerank = adc_serve(vecs, q, codes, _N_QUERIES)

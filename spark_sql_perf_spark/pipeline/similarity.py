@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..catalog import table
 from ..functions.lsh import (
     BUCKET_CAP as _KNN_CAP,
@@ -313,7 +314,7 @@ def lsh_buckets_df(
         ).alias(f"sigx{i}")
         for i in range(1, levels)
     ]
-    signed = vecs.select("vec_id", "v", *sig_cols).localCheckpoint()
+    signed = memo.materialize(vecs.select("vec_id", "v", *sig_cols), eager=False)
     if levels == 0:
         return signed.select("vec_id", "v", F.col("sig0").alias("sig"))
 

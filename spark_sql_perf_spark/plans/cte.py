@@ -5,13 +5,9 @@ query like TPC-DS q14a (reference shape: TPCDS_1_4_Queries.scala:609-713)
 re-executes ``cross_items``/``avg_sales`` once per channel branch — three
 scans of item/store_sales per CTE. At 100x scale the re-executed
 aggregation dominates the query. The scale-mode fix: run each shared CTE
-once, cache it, register it as a temp view, and run the remainder of the
-query against the views — one scan per CTE, identical results (the CTE
-bodies are unchanged; only their execution count drops).
-
-Cached frames and registered views are handed to the module-memo
-registry, so ``ExperimentRunner``'s per-iteration cleanup / teardown
-drains them like every other operator memo (see ``memo.py``).
+once (``memo.materialize``), register it as a temp view, and run the
+remainder of the query against the views — one scan per CTE, identical
+results (the CTE bodies are unchanged; only their execution count drops).
 """
 
 from __future__ import annotations
@@ -21,26 +17,6 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import memo
-
-# (spark, view_name, cached_frame_or_None) triples awaiting cleanup
-_LIVE: list[tuple[SparkSession, str, DataFrame | None]] = []
-
-
-def _evict_materialized() -> None:
-    while _LIVE:
-        spark, name, df = _LIVE.pop()
-        if df is not None:
-            try:
-                df.unpersist(blocking=False)
-            except Exception:
-                pass
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-
-
-memo.register_evictor(_evict_materialized)
 
 
 def split_with_clauses(sql: str) -> tuple[list[tuple[str, str]], str]:
@@ -91,19 +67,19 @@ def materialize_ctes(
     Every CTE is registered as a temp view in definition order (so later
     CTEs can reference earlier ones, e.g. q23's best_ss_customer ->
     max_store_sales); the names in ``shared`` — the ones referenced by
-    more than one branch — are cached so each executes exactly once.
-    CTE-name scoping is preserved for OTHER queries: a plain WITH query
-    whose CTE happens to share a name resolves its own CTE first (SQL
-    scoping beats temp views); the views are dropped at the next memo
-    eviction regardless.
+    more than one branch — are materialized so each executes exactly
+    once. The views are dropped as soon as the body has been analyzed
+    (the returned frame holds the resolved plans, not the names), so
+    no view outlives the call.
     """
     ctes, body = split_with_clauses(sql)
-    for name, cte_body in ctes:
-        df = spark.sql(cte_body)
-        cached = None
-        if name in shared:
-            df = df.cache()
-            cached = df
-        df.createOrReplaceTempView(name)
-        _LIVE.append((spark, name, cached))
-    return spark.sql(body)
+    try:
+        for name, cte_body in ctes:
+            df = spark.sql(cte_body)
+            if name in shared:
+                df = memo.materialize(df, eager=False)
+            df.createOrReplaceTempView(name)
+        return spark.sql(body)
+    finally:
+        for name, _ in ctes:
+            spark.catalog.dropTempView(name)

@@ -216,17 +216,15 @@ class ExperimentRunner:
                             results=results,
                         )
                     )
-                # post-iteration cleanup (Benchmarkable.scala:58-65 analog):
-                # drain module memos FIRST so their dicts don't hold
-                # references to frames clearCache is about to uncache
-                memo.evict_all()
+                # post-iteration cleanup (Benchmarkable.scala:58-65 analog)
+                memo.release_all()
                 self.spark.catalog.clearCache()
         finally:
             # restore even on variation.setup failure / interrupt — the
             # session is shared and a leaked conf (e.g. AQE off) would
-            # silently change every subsequent run; and drain memos so a
-            # run ending on d2/w8 doesn't leave executor storage pinned
-            memo.evict_all()
+            # silently change every subsequent run; and release what an
+            # interrupted iteration materialized
+            memo.release_all()
             for key, val in saved_conf.items():
                 if val is None:
                     self.spark.conf.unset(key)

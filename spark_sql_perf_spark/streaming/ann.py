@@ -3,7 +3,7 @@ micro-batch against a STATIC adaptive-bucketed corpus (sim6's
 lsh_buckets_df layout), top-k per query.
 
 The serving shape at scale: the corpus index is built once (bucketed,
-persisted in memory OR laid out on storage — ``write_lsh_partitioned``
+materialized OR laid out on storage — ``write_lsh_partitioned``
 below), queries arrive continuously, and each micro-batch is a
 stateless bucket equi-join + per-query top-k — no streaming state at
 all, so it runs through foreachBatch (per-query ranking is a plain
@@ -38,6 +38,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..functions.lsh import LshParams, sign_lsh_sig_spark, sized_params, split_marker
 
 # pipeline.similarity (a registry module) is imported lazily inside the
@@ -65,7 +66,7 @@ def build_ann_index(
     n: int | None = None,
 ) -> AnnIndex:
     """The static corpus index: (vec_id, v, sig) under the adaptive
-    split, persisted — built once, probed by every batch. Pass ``n``
+    split, materialized — built once, probed by every batch. Pass ``n``
     (the corpus row count) to size the key space with ``sized_params``
     (the production path), or an explicit ``params``; the default is the
     oracle-scale module constants (test/registry scale only)."""
@@ -73,9 +74,12 @@ def build_ann_index(
 
     if params is None:
         params = sized_params(n) if n is not None else LshParams()
-    df = lsh_buckets_df(
-        vecs, params.nbits, params.split_bits, params.cap, dim, params.levels
-    ).persist()
+    df = memo.materialize(
+        lsh_buckets_df(
+            vecs, params.nbits, params.split_bits, params.cap, dim, params.levels
+        ),
+        eager=False,
+    )
     return AnnIndex(df, params, dim)
 
 
@@ -270,8 +274,8 @@ def ann_serve_at_rest(
     # bounded distinct-collect below AND the join), and without
     # materialization both consumers re-evaluate the plane projections
     # per query row — the same double-evaluation lsh_buckets_df's
-    # checkpoint prevents (see its docstring). Released on GC.
-    keyed = _query_keys(queries, dim, params).localCheckpoint()
+    # checkpoint prevents (see its docstring).
+    keyed = memo.materialize(_query_keys(queries, dim, params), eager=False)
     probed = sorted(
         r["p"]
         for r in keyed.select(
@@ -324,7 +328,7 @@ def streaming_ann_serve(
     partitioned layout (building it first if absent) and every batch
     probes under partition pruning — the 100 TB shape, where the index
     outlives any session and is never rebuilt per restart. Without it,
-    the index is built in memory and persisted for the drain (test /
+    the index is built and materialized for the drain (test /
     small-corpus shape). Key-space sizing defaults to ``sized_params``
     over the corpus count — the production rule — unless ``params``
     pins it (the batch-equivalence tests pin the oracle-scale constants
@@ -379,4 +383,4 @@ def streaming_ann_serve(
             raise TimeoutError("streaming_ann_serve: drain exceeded 120s")
     finally:
         if index is not None:
-            index.df.unpersist(blocking=False)
+            memo.release(index.df)

@@ -18,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..operators.registry import query
 from .sink import _BUCKET, _with_bucket, merge_into_buckets
 from .windows import stream_events
@@ -294,7 +295,7 @@ def grow_index_append(spark: SparkSession, index_dir: str, novels: DataFrame) ->
         # + write jobs outright (isEmpty only touches the
         # batch-bounded side)
         return
-    novel_ids = novels.select("id").distinct().localCheckpoint(eager=True)
+    novel_ids = memo.materialize(novels.select("id").distinct(), eager=True)
     live = None
     try:
         parts = [
@@ -315,13 +316,13 @@ def grow_index_append(spark: SparkSession, index_dir: str, novels: DataFrame) ->
             )
             return df.select(F.lit(rel).alias("rel"), F.col("id"), band)
 
-        live = (
+        live = memo.materialize(
             guard_read("hashed")
             .unionByName(guard_read("sigs"))
             .unionByName(guard_read("bands"))
             .join(F.broadcast(novel_ids), "id", "left_semi")
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            eager=True,
         )
         for rel, _ in _INDEX_RELS:
             if rel == "bands":
@@ -349,13 +350,7 @@ def grow_index_append(spark: SparkSession, index_dir: str, novels: DataFrame) ->
                 .parquet(_delta_dir(index_dir, rel))
             )
     finally:
-        for frame in (novel_ids, live):
-            if frame is None:
-                continue
-            try:
-                frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:
-                pass
+        memo.release(novel_ids, live)
 
 
 def probe_index_at_rest(
@@ -394,8 +389,8 @@ def probe_index_at_rest(
         "id", "band", "bh"
     )
     bframes = _minhash_frames(batch)
-    cand = probe_candidates(ibands, bframes[2], exclude_self).localCheckpoint(
-        eager=True
+    cand = memo.materialize(
+        probe_candidates(ibands, bframes[2], exclude_self), eager=True
     )
     parts = [
         r[0]
@@ -655,7 +650,7 @@ def streaming_incremental_probe(
             # recompute guard. The blocks are released when the batch
             # ends; a long-running stream must not accumulate one pinned
             # RDD per micro-batch.
-            out = out.localCheckpoint(eager=True)
+            out = memo.materialize(out, eager=True)
             # 1. COMMIT the decisions (replay-idempotent first-wins
             # merge) BEFORE any index mutation.
             merge_into_buckets(
@@ -681,13 +676,13 @@ def streaming_incremental_probe(
                 .distinct()
                 .collect()
             ]
-            stored_novel_ids = (
+            stored_novel_ids = memo.materialize(
                 spark.read.parquet(target_dir)
                 .where(F.col(_BUCKET).isin(touched))
                 .where(F.col("is_novel"))
                 .select(F.col("batch_id").alias("id"))
-                .join(F.broadcast(batch.select("id")), "id", "left_semi")
-                .localCheckpoint(eager=True)
+                .join(F.broadcast(batch.select("id")), "id", "left_semi"),
+                eager=True,
             )
             grow_index_append(
                 spark, index_dir, batch.join(F.broadcast(stored_novel_ids), "id")
@@ -696,13 +691,7 @@ def streaming_incremental_probe(
                 compact_index(spark, index_dir, max_files=compact_max_files)
             state["healthy"] = True
         finally:
-            for frame in (out, cand, stored_novel_ids):
-                if frame is None:
-                    continue
-                try:
-                    frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
-                except Exception:
-                    pass
+            memo.release(out, cand, stored_novel_ids)
 
     stream = stream_documents(spark, sf_dir, stream_dir, max_files_per_trigger)
     return (

@@ -35,6 +35,7 @@ def _snap(df):
 
 
 def test_at_rest_matches_in_memory_and_prunes(spark, tmp_path):
+    from spark_sql_perf_spark import memo
     from spark_sql_perf_spark.pipeline.similarity import embedding_dim
     from spark_sql_perf_spark.streaming.ann import (
         ann_serve_at_rest,
@@ -58,7 +59,7 @@ def test_at_rest_matches_in_memory_and_prunes(spark, tmp_path):
         want = ann_serve_batch(queries, index, k=3)
         assert _snap(got) == _snap(want) and got.count() > 0
     finally:
-        index.df.unpersist(blocking=False)
+        memo.release(index.df)
 
     # sidecar round-trip
     params, nparts, side_dim = read_lsh_params(spark, path)

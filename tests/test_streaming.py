@@ -429,6 +429,7 @@ def test_streaming_ann_serve_matches_batch(spark):
 
     from pyspark.sql import functions as F
 
+    from spark_sql_perf_spark import memo
     from spark_sql_perf_spark.functions.lsh import LshParams
     from spark_sql_perf_spark.pipeline.similarity import embedding_dim
     from spark_sql_perf_spark.streaming.ann import (
@@ -469,5 +470,5 @@ def test_streaming_ann_serve_matches_batch(spark):
         (r.query_id, r.rn): (r.neighbor_id, r.cosine)
         for r in ann_serve_batch(corpus, index).collect()
     }
-    index.df.unpersist(blocking=False)
+    memo.release(index.df)
     assert got == want and len(got) > 0

@@ -48,41 +48,25 @@ def corpus_yoy(spark, duck, tmp_path_factory):
 
 
 def _scan_count(df, tbl: str) -> int:
-    """Parquet scans of ``tbl`` in the executed plan.
-
-    InMemoryTableScan is a LEAF of the executed plan — its cache-build
-    plan is not a child node and executes once no matter how many
-    branches read the cache — but ``toString`` prints the build plan
-    inline under each InMemoryRelation, so a naive text count
-    double-counts it. Skip lines nested deeper than an active
-    InMemoryRelation node (treeString indentation = position of the
-    node marker)."""
+    """Parquet scans of ``tbl`` in the executed plan. A materialized CTE
+    is a leaf (``Scan ExistingRDD``): its own plan ran when it was
+    materialized and is not part of this one."""
     plan = df._jdf.queryExecution().executedPlan().toString()
-    n = 0
-    skip_deeper_than: int | None = None
-    for line in plan.splitlines():
-        indent = max(line.find("+- "), line.find(":- "))
-        if indent < 0:
-            indent = len(line) - len(line.lstrip(" :"))
-        if skip_deeper_than is not None:
-            if indent > skip_deeper_than:
-                continue
-            skip_deeper_than = None
-        if "InMemoryRelation" in line:
-            skip_deeper_than = indent
-            continue
-        if "Scan parquet" in line.split("Location")[0] and f"/{tbl}" in line:
-            n += 1
-    return n
+    return sum(
+        1
+        for line in plan.splitlines()
+        if "Scan parquet" in line.split("Location")[0] and f"/{tbl}" in line
+    )
 
 
 @pytest.mark.parametrize("name,tbl", [("q14a", "item"), ("q24a", "store_sales")])
 def test_materialized_cte_mode(corpus_yoy, name, tbl):
-    """Scale mode: shared CTEs cached + executed once. Results identical
-    to the inlined execution; the per-CTE table re-scan is gone (plain
-    q14a scans item 3x inside cross_items alone; materialized, the final
-    plan reads the cached CTE and scans item only in the channel
-    branches — for q24a's ssales the final plan scans store_sales 0x)."""
+    """Scale mode: shared CTEs materialized + executed once. Results
+    identical to the inlined execution; the per-CTE table re-scan is
+    gone (plain q14a scans item 3x inside cross_items alone;
+    materialized, the final plan reads the checkpointed CTE and scans
+    item only in the channel branches — for q24a's ssales the final
+    plan scans store_sales 0x)."""
     from spark_sql_perf_spark import memo
     from spark_sql_perf_spark.operators.tpcds14_suite import (
         TPCDS14_QUERIES,
@@ -94,7 +78,7 @@ def test_materialized_cte_mode(corpus_yoy, name, tbl):
         mat = run_materialized(corpus_yoy, name).toPandas()
         _compare(mat, plain, f"{name} materialized-vs-inlined")
     finally:
-        memo.evict_all()
+        memo.release_all()
     # plan-shape assertion on fresh, UNEXECUTED frames with AQE off —
     # an executed AdaptiveSparkPlan prints Final + Initial sections,
     # which double-counts every scan in the text dump
@@ -109,7 +93,7 @@ def test_materialized_cte_mode(corpus_yoy, name, tbl):
             assert n_mat == 0, f"store_sales still scanned {n_mat}x"
     finally:
         corpus_yoy.conf.set("spark.sql.adaptive.enabled", "true")
-        memo.evict_all()
+        memo.release_all()
 
 
 @pytest.mark.parametrize("name", sorted(TPCDS14_YOY))
