@@ -62,7 +62,9 @@ outgrew the driver's ~2 KB stdout-tail capture): stdout now ENDS with a
 compact core line (metric/value/queries/median_shift, <1 KB — asserted
 in tests/test_bench_artifact.py) and the full receipt (calibration
 ratios, variance samples, notes) is written to a committed
-``BENCH_DETAIL_r{N}.json`` side file the core line names.
+``BENCH_DETAIL_r{N}_c{cores}.json`` side file the core line names (the
+core count keeps a same-round low-core scaling run from overwriting the
+full-core receipt).
 
 Round 10 de-monocultures the calibration basis (the r9 verdict's
 finding: all 9 thermometers were join/agg/scan shapes, and the r9 raw
@@ -486,7 +488,7 @@ def _this_round() -> int:
     BENCH_r*.json + 1 (the driver names the current round's artifact the
     same way) — computed from the file LIST, not from the normalization
     baseline, which deliberately skips past truncated artifacts. Falls
-    back to 0 (-> BENCH_DETAIL_r0.json, clearly out-of-band) when no
+    back to 0 (-> BENCH_DETAIL_r00_c*.json, clearly out-of-band) when no
     history exists."""
     import re
 
@@ -496,6 +498,13 @@ def _this_round() -> int:
         if (m := re.search(r"_r(\d+)", os.path.basename(p)))
     ]
     return (max(rounds) + 1) if rounds else 0
+
+
+def detail_name(round_no: int, cores: int) -> str:
+    """DETAIL side-file name: the zero-padded round, as in the
+    BENCH_r{NN}.json artifacts, plus the Spark core count, so the
+    8-core and full-core runs of one round each keep their receipt."""
+    return f"BENCH_DETAIL_r{round_no:02d}_c{cores}.json"
 
 
 def _committed_bench_files() -> list[str]:
@@ -754,11 +763,9 @@ def main() -> None:
     # ends with a compact core line — metric/value/queries/median_shift,
     # well under 1 KB — so the tail capture always holds a complete,
     # parseable JSON line with the raw numbers.
-    # zero-padded round like the driver's BENCH_r{NN}.json (r9 verdict
-    # naming nit — one glob-friendly scheme across all round artifacts)
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
-        f"BENCH_DETAIL_r{_this_round():02d}.json",
+        detail_name(_this_round(), spark.sparkContext.defaultParallelism),
     )
     with open(detail_path, "w") as f:
         json.dump(payload, f, indent=1)

@@ -17,9 +17,17 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from .. import memo
 from ..operators.registry import query
+from ..pipeline.dedup import _N_HASHES
 from .sink import _BUCKET, _with_bucket, merge_into_buckets
 from .windows import stream_events
 
@@ -99,35 +107,60 @@ def stream_documents(
     return reader.parquet(stream_dir)
 
 
-# Bounded id-derived partition key for the at-rest index relations
-# (r12 VERDICT task 2 — the one 100 TB residual: hashed/sigs took a
-# full column-pruned scan every micro-batch; only bands had a pruning
-# layout, and band partitioning bought nothing because a batch's
-# signatures hit every band). All three relations now lay out
-# partitioned by ``id_part = xxhash64(id) % _N_ID_PARTS`` — the same
-# bounded-key pattern as ann_serve_at_rest's sig-derived layout: a
-# probe/guard collects the DISTINCT parts its candidate/novel ids hash
-# into (a driver-side list capped at _N_ID_PARTS values, never O(ids))
-# and reads only those directories via an isin partition filter. In the
-# trickle regime — where the fixed O(index) per-batch I/O is the tax —
-# candidate ids are few and the scan shrinks to |candidate parts| /
-# _N_ID_PARTS of the index; at large batches the parts saturate and the
-# scan amortizes over the candidates, which is the regime where a full
-# scan was already fine.
+# The at-rest index: three relations (hashed shingle sets, minhash
+# signatures, band buckets), each an ``id_part``-partitioned base plus a
+# flat ``<rel>__delta`` sidecar.
 #
-# Appends do NOT write into the partitioned base (a saturating batch
-# would publish one file per touched directory — measured at 192
-# files/append vs the flat layout's 3, a 38x listing-tax multiplier):
-# each relation's accepted novels land as ONE flat file per micro-batch
-# in a ``<rel>__delta`` sidecar — the LSM/base+delta shape every table
-# format uses — so the append commits as a single rename, with each
-# id's rows (all bands included) in that one file: fully appended or
-# absent, the guard premise, structural. Probes and guards read pruned
-# base UNION delta; the delta stays small because compact_index folds
-# it into the partitioned base on the threshold cadence via a
+# Layout. The base is partitioned by ``id_part = xxhash64(id) %
+# _N_ID_PARTS``, a bounded id-derived key (the same pattern as
+# ann_serve_at_rest's sig-derived layout). A probe or guard collects the
+# distinct parts its candidate or novel ids hash into (a driver-side list
+# of at most _N_ID_PARTS values, never O(ids)) and reads only those
+# directories. In the trickle regime, where the fixed per-batch index
+# I/O is the tax, the scan shrinks to |parts| / _N_ID_PARTS of the
+# index; at large batches the parts saturate and the scan amortizes over
+# the candidates.
+#
+# Appends do not write into the partitioned base: a saturating batch
+# would publish one file per touched directory (192 files per append
+# against the flat sidecar's 3). Each relation's accepted novels land as
+# ONE flat file per micro-batch in the delta sidecar, so an append
+# commits as a single rename with all of an id's rows (every band) in
+# that file: fully appended or absent, the guard premise. compact_index
+# folds the delta into the base on the threshold cadence through a
 # crash-safe two-directory swap (recover_index).
+#
+# Open rule (read_index_relation). A relation is opened with its
+# declared schema (_INDEX_RELS) and a file index over only the
+# directories being read. An inferred schema costs a one-task
+# footer-reading Spark job per read, and Spark lists more than
+# spark.sql.sources.parallelPartitionDiscovery.threshold (32) paths or
+# subdirectories with a distributed listing job (one task per
+# directory). A pruned open of at most 32 parts, and the flat delta,
+# therefore launch no Spark job; a full open of the 64-directory base
+# launches the one listing job.
 _N_ID_PARTS = 64
 _ID_PART = "id_part"
+
+
+def _long(name: str) -> StructField:
+    return StructField(name, LongType())
+
+
+# Relation -> declared schema (all columns nullable, as parquet writes
+# them). Every writer (write_index_frames, grow_index_append,
+# compact_index) writes exactly these columns; the base adds the
+# ``id_part`` partition column. tests/test_index_open.py checks the
+# declared schemas against the inferred ones of a built and grown index.
+_INDEX_RELS: dict[str, StructType] = {
+    "hashed": StructType([_long("id"), _long("h")]),
+    "sigs": StructType(
+        [_long("id"), *(_long(f"m{j}") for j in range(_N_HASHES)), _long("n_sh")]
+    ),
+    "bands": StructType(
+        [_long("id"), StructField("band", IntegerType()), StructField("bh", StringType())]
+    ),
+}
 
 
 def _delta_dir(index_dir: str, rel: str) -> str:
@@ -170,7 +203,7 @@ def write_index_frames(
     (id_part-partitioned, one file per directory) — shared by
     build_probe_index and every tool/test that stages an index from its
     own corpus, so a layout change happens in exactly one place."""
-    for rel, frame in (("hashed", hashed), ("sigs", sigs), ("bands", bands)):
+    for rel, frame in zip(_INDEX_RELS, (hashed, sigs, bands)):
         (
             _with_id_part(frame)
             .repartition(_N_ID_PARTS, F.col(_ID_PART))
@@ -181,34 +214,43 @@ def write_index_frames(
 
 
 def read_index_relation(
-    spark: SparkSession, index_dir: str, rel: str, prune=None
+    spark: SparkSession,
+    index_dir: str,
+    rel: str,
+    parts: list[int] | None = None,
 ) -> DataFrame:
-    """The live view of one index relation: the id_part-partitioned
-    base — partition-PRUNED when ``prune`` (a Column predicate over
-    id_part) is given and the layout carries the column — unioned with
-    the flat ``__delta`` sidecar of not-yet-compacted appends. The
-    delta is bounded by the compaction cadence, so it is always read
-    in full (and a legacy base without id_part simply skips pruning —
-    decisions are identical either way)."""
-    base = spark.read.parquet(f"{index_dir}/{rel}")
-    cols = [c for c in base.columns if c != _ID_PART]
-    if prune is not None and _ID_PART in base.columns:
-        base = base.where(prune)
-    out = base.select(cols)
+    """The live view of one index relation: its id_part-partitioned
+    base unioned with the flat ``__delta`` sidecar of not-yet-compacted
+    appends, both read with the relation's declared schema.
+
+    ``parts`` (a list of id_part values) restricts the base to those
+    parts: only their existing directories are opened (``basePath``
+    keeps id_part a partition column) and ``id_part IN parts`` still
+    filters the scan, so the plan carries it as a partition filter. A
+    pruned open of at most 32 directories launches no Spark job; a full
+    open lists the whole base (module note). The delta is bounded by
+    the compaction cadence and is always read in full. A legacy base
+    written without partitionBy has no id_part column and is read in
+    full whatever ``parts`` says; decisions are identical either way."""
+    schema = _INDEX_RELS[rel]
+    base = f"{index_dir}/{rel}"
     fs, Path = _index_fs(spark, index_dir)
+    dirs = _partition_dirs(fs, Path, base)
+    if not dirs:
+        out = spark.read.schema(schema).parquet(base)
+    else:
+        with_part = StructType([*schema, StructField(_ID_PART, IntegerType())])
+        reader = spark.read.schema(with_part).option("basePath", base)
+        if parts is None:
+            out = reader.parquet(base)
+        else:
+            out = reader.parquet(*(dirs[p] for p in sorted(set(parts)) if p in dirs))
+            out = out.where(F.col(_ID_PART).isin(parts))
+        out = out.select(*schema.fieldNames())
     delta = _delta_dir(index_dir, rel)
-    if fs.exists(Path(delta)) and _count_data_files(fs, Path, delta) > 0:
-        out = out.unionByName(spark.read.parquet(delta).select(cols))
+    if _count_data_files(fs, Path, delta) > 0:
+        out = out.unionByName(spark.read.schema(schema).parquet(delta))
     return out
-
-
-# The three at-rest index relations, each partitioned by the bounded
-# id-derived key (module note above).
-_INDEX_RELS: tuple[tuple[str, str | None], ...] = (
-    ("hashed", _ID_PART),
-    ("sigs", _ID_PART),
-    ("bands", _ID_PART),
-)
 
 
 def _index_fs(spark: SparkSession, index_dir: str):
@@ -234,19 +276,22 @@ def _count_data_files(fs, Path, dir_path: str) -> int:
     return n
 
 
-def _count_partition_dirs(fs, Path, dir_path: str) -> int:
-    """Top-level ``col=value`` partition directories of a relation —
-    the compacted-state file FLOOR (compaction leaves one file per
-    directory), which the rewrite threshold must sit above or a
-    partitioned relation would re-trigger a full rewrite on every
-    check."""
+def _partition_dirs(fs, Path, dir_path: str) -> dict[int, str]:
+    """id_part value -> path of each top-level ``id_part=N`` directory of
+    a relation base; empty for a missing or un-partitioned base. Its
+    size is also the compacted-state file floor (compaction leaves one
+    file per directory), which compact_index's rewrite threshold must
+    sit above or a partitioned relation would re-trigger a full rewrite
+    on every check."""
     if not fs.exists(Path(dir_path)):
-        return 0
-    return sum(
-        1
-        for status in fs.listStatus(Path(dir_path))
-        if status.isDirectory() and "=" in status.getPath().getName()
-    )
+        return {}
+    prefix = f"{_ID_PART}="
+    names = (status.getPath().getName() for status in fs.listStatus(Path(dir_path)))
+    return {
+        int(name[len(prefix):]): f"{dir_path}/{name}"
+        for name in names
+        if name.startswith(prefix)
+    }
 
 
 def index_file_counts(spark: SparkSession, index_dir: str) -> dict[str, int]:
@@ -256,7 +301,7 @@ def index_file_counts(spark: SparkSession, index_dir: str) -> dict[str, int]:
     return {
         rel: _count_data_files(fs, Path, f"{index_dir}/{rel}")
         + _count_data_files(fs, Path, _delta_dir(index_dir, rel))
-        for rel, _ in _INDEX_RELS
+        for rel in _INDEX_RELS
     }
 
 
@@ -304,11 +349,10 @@ def grow_index_append(spark: SparkSession, index_dir: str, novels: DataFrame) ->
             .distinct()
             .collect()
         ]
-        prune = F.col(_ID_PART).isin(parts) if parts else F.lit(False)
-        frames = dict(zip(("hashed", "sigs", "bands"), _minhash_frames(novels)))
+        frames = dict(zip(_INDEX_RELS, _minhash_frames(novels)))
 
         def guard_read(rel: str) -> DataFrame:
-            df = read_index_relation(spark, index_dir, rel, prune=prune)
+            df = read_index_relation(spark, index_dir, rel, parts=parts)
             band = (
                 F.col("band")
                 if rel == "bands"
@@ -324,7 +368,7 @@ def grow_index_append(spark: SparkSession, index_dir: str, novels: DataFrame) ->
             .distinct(),
             eager=True,
         )
-        for rel, _ in _INDEX_RELS:
+        for rel in _INDEX_RELS:
             if rel == "bands":
                 live_pairs = live.where(F.col("rel") == rel).select("id", "band")
                 to_append = frames[rel].join(
@@ -364,8 +408,8 @@ def probe_index_at_rest(
     FIRST (one localCheckpoint job — the bands join against the
     broadcast batch side), the distinct id_part values of the candidate
     ids are collected (a bounded list, <= _N_ID_PARTS, never O(ids)),
-    and the hashed/sigs verification scans read ONLY those directories
-    via an isin partition filter. Per-batch index I/O becomes
+    and the hashed/sigs verification scans open ONLY those directories
+    (read_index_relation's ``parts``). Per-batch index I/O becomes
     O(candidate partitions) instead of O(index) — the trickle-regime
     fix; at saturating batch sizes the filter keeps every directory and
     the plan equals the unpruned one. Every relation read is base
@@ -385,9 +429,7 @@ def probe_index_at_rest(
         probe_with_index,
     )
 
-    ibands = read_index_relation(spark, index_dir, "bands").select(
-        "id", "band", "bh"
-    )
+    ibands = read_index_relation(spark, index_dir, "bands")
     bframes = _minhash_frames(batch)
     cand = memo.materialize(
         probe_candidates(ibands, bframes[2], exclude_self), eager=True
@@ -396,11 +438,8 @@ def probe_index_at_rest(
         r[0]
         for r in cand.select(_id_part("idx_id").alias("p")).distinct().collect()
     ]
-    prune = (
-        F.col(_ID_PART).isin(parts) if parts else F.lit(False)
-    )
-    ihashed = read_index_relation(spark, index_dir, "hashed", prune=prune)
-    isigs = read_index_relation(spark, index_dir, "sigs", prune=prune)
+    ihashed = read_index_relation(spark, index_dir, "hashed", parts=parts)
+    isigs = read_index_relation(spark, index_dir, "sigs", parts=parts)
     out = probe_with_index(
         ihashed, isigs, ibands, batch,
         exclude_self=exclude_self, cand=cand, bframes=bframes,
@@ -431,7 +470,7 @@ def recover_index(spark: SparkSession, index_dir: str) -> None:
     relations, so a crash mid-swap would otherwise fail every replay
     before compaction's own recovery could ever execute."""
     fs, Path = _index_fs(spark, index_dir)
-    for rel, _ in _INDEX_RELS:
+    for rel in _INDEX_RELS:
         live, old, tmp = (
             f"{index_dir}/{rel}",
             f"{index_dir}/{rel}__old",
@@ -491,7 +530,7 @@ def compact_index(
     recover_index(spark, index_dir)
     fs, Path = _index_fs(spark, index_dir)
     compacted: dict[str, int] = {}
-    for rel, part in _INDEX_RELS:
+    for rel in _INDEX_RELS:
         live, old, tmp = (
             f"{index_dir}/{rel}",
             f"{index_dir}/{rel}__old",
@@ -501,7 +540,7 @@ def compact_index(
         delta_old = f"{delta}__old"
         n_base = _count_data_files(fs, Path, live)
         n_delta = _count_data_files(fs, Path, delta)
-        base_excess = max(0, n_base - _count_partition_dirs(fs, Path, live))
+        base_excess = max(0, n_base - len(_partition_dirs(fs, Path, live)))
         if n_delta + base_excess <= max_files:
             continue
         nbytes = fs.getContentSummary(Path(live)).getLength()
@@ -515,9 +554,9 @@ def compact_index(
         # per directory — the directory is the pruning unit)
         (
             _with_id_part(df)
-            .repartition(max(n_target, 16), F.col(part))
+            .repartition(max(n_target, 16), F.col(_ID_PART))
             .write.mode("overwrite")
-            .partitionBy(part)
+            .partitionBy(_ID_PART)
             .parquet(tmp)
         )
         if fs.exists(Path(delta)):

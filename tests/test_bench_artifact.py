@@ -32,7 +32,7 @@ def test_core_line_fits_tail_window():
         "queries": {q: 9999.999 for q in bench.HEADLINE},
         "thermo": {q: 9999.999 for q in bench.THERMOMETERS},
         "sf": 0.1,
-        "detail": "BENCH_DETAIL_r99.json",
+        "detail": bench.detail_name(99, 128),
         "median_shift": 1.094,
         "value_normalized": 99999.999,
     }
@@ -41,6 +41,12 @@ def test_core_line_fits_tail_window():
         f"core line is {len(line)} bytes — trim HEADLINE or the core keys"
         " before it outgrows the driver's tail capture again"
     )
+
+
+def test_detail_name_carries_round_and_core_count():
+    """A same-round run at another core count writes its own receipt."""
+    assert bench.detail_name(15, 8) == "BENCH_DETAIL_r15_c8.json"
+    assert bench.detail_name(3, 32) == "BENCH_DETAIL_r03_c32.json"
 
 
 def test_detail_round_is_latest_committed_plus_one():

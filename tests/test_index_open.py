@@ -1,0 +1,169 @@
+"""Opening the at-rest dedup index (streaming/dedup.read_index_relation).
+
+Each relation is read with a declared schema and a file index over only
+the directories being read. These tests pin what that must not change:
+the declared schemas equal what the writers actually write, a pruned
+open returns exactly the rows of the unpruned base filtered to the
+requested parts (plus the whole delta), a legacy un-partitioned base
+still reads in full, and a pruned open launches no Spark job."""
+
+from __future__ import annotations
+
+import os
+import tempfile
+
+import pytest
+from pyspark.sql import functions as F
+
+from tests.conftest import SF_DIR_TINY
+
+RELS = ("hashed", "sigs", "bands")
+
+
+def _novels(docs, mod: int, offset: int):
+    return docs.where(F.col("doc_id") % mod == 0).select(
+        (F.col("doc_id") + offset).alias("id"),
+        F.array_join(F.reverse(F.split(F.lower("text"), r"\s+")), " ").alias("text"),
+    )
+
+
+@pytest.fixture(scope="module")
+def grown_index(spark):
+    """build_probe_index over the tiny corpus (every id_part directory
+    present) plus one grow_index_append, so every relation has a delta."""
+    from spark_sql_perf_spark.catalog import table
+    from spark_sql_perf_spark.streaming.dedup import build_probe_index, grow_index_append
+
+    index_dir = os.path.join(tempfile.mkdtemp(prefix="index-open-"), "index")
+    build_probe_index(spark, SF_DIR_TINY, index_dir)
+    docs = table(spark, SF_DIR_TINY, "documents")
+    grow_index_append(spark, index_dir, _novels(docs, 13, 4_000_000))
+    return index_dir
+
+
+@pytest.fixture(scope="module")
+def sparse_indexes(spark):
+    """Two indexes over five corpus docs with the same delta from one
+    grow_index_append: ``partitioned`` (write_index_frames, so most
+    id_part directories are missing) and ``legacy`` (the same frames
+    written without partitionBy, so the base has no id_part column)."""
+    import shutil
+
+    from spark_sql_perf_spark.catalog import table
+    from spark_sql_perf_spark.pipeline.dedup import _minhash_frames
+    from spark_sql_perf_spark.streaming.dedup import grow_index_append, write_index_frames
+
+    work = tempfile.mkdtemp(prefix="index-open-sparse-")
+    docs = table(spark, SF_DIR_TINY, "documents")
+    corpus = docs.orderBy("doc_id").limit(5).select(
+        F.col("doc_id").alias("id"), F.lower("text").alias("text")
+    )
+    frames = _minhash_frames(corpus)
+    partitioned, legacy = (os.path.join(work, kind) for kind in ("partitioned", "legacy"))
+    write_index_frames(partitioned, *frames)
+    grow_index_append(spark, partitioned, _novels(docs, 97, 7_000_000))
+    for rel, frame in zip(RELS, frames):
+        frame.write.parquet(f"{legacy}/{rel}")
+        shutil.copytree(f"{partitioned}/{rel}__delta", f"{legacy}/{rel}__delta")
+    return {"partitioned": partitioned, "legacy": legacy}
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _job_count(spark) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sc._jsc.sc().statusStore().jobsList(sc._jvm.java.util.ArrayList()).size()
+
+
+def test_declared_schemas_match_written_relations(spark, grown_index):
+    """A wrong declared type would misread data silently: each declared
+    schema must equal the inferred schema of both the base (minus the
+    id_part partition column) and the delta that the writers produced."""
+    from spark_sql_perf_spark.streaming.dedup import _ID_PART, _INDEX_RELS
+
+    assert tuple(_INDEX_RELS) == RELS
+    for rel, schema in _INDEX_RELS.items():
+        base = spark.read.parquet(f"{grown_index}/{rel}").drop(_ID_PART).schema
+        delta = spark.read.parquet(f"{grown_index}/{rel}__delta").schema
+        assert base == schema, (rel, base.simpleString(), schema.simpleString())
+        assert delta == schema, (rel, delta.simpleString(), schema.simpleString())
+
+
+def _filtered_reference(spark, index_dir: str, rel: str, parts):
+    """The unpruned base (inferred schema) filtered to ``parts``, plus
+    the whole delta: what a pruned open must return."""
+    from spark_sql_perf_spark.streaming.dedup import _ID_PART
+
+    base = spark.read.parquet(f"{index_dir}/{rel}")
+    if _ID_PART in base.columns:
+        base = base.where(F.col(_ID_PART).isin(parts)).drop(_ID_PART)
+    return _rows(base) + _rows(spark.read.parquet(f"{index_dir}/{rel}__delta"))
+
+
+def test_pruned_open_equals_filtered_full_read(spark, grown_index, sparse_indexes):
+    from spark_sql_perf_spark.streaming.dedup import (
+        _INDEX_RELS,
+        _ID_PART,
+        read_index_relation,
+    )
+
+    sparse = sparse_indexes["partitioned"]
+    present = sorted(
+        r[0]
+        for r in spark.read.parquet(f"{sparse}/sigs").select(_ID_PART).distinct().collect()
+    )
+    missing = sorted(set(range(64)) - set(present))
+    assert present and missing
+    assert all(os.path.isdir(f"{grown_index}/sigs/{_ID_PART}={p}") for p in (0, 7, 21, 63))
+    cases = [
+        (grown_index, [0, 7, 21, 63]),  # every part has a directory
+        (sparse, present[:1] + missing[:2]),  # some parts have none
+        (sparse, missing[:3]),  # no requested part has a directory
+        (sparse, []),
+    ]
+    for index_dir, parts in cases:
+        for rel in _INDEX_RELS:
+            got = _rows(read_index_relation(spark, index_dir, rel, parts=parts))
+            want = sorted(_filtered_reference(spark, index_dir, rel, parts))
+            assert got == want, (index_dir, rel, parts)
+    # the pruned plan still filters at the source
+    plan = read_index_relation(
+        spark, grown_index, "sigs", parts=[3, 4]
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [id_part" in plan, plan
+
+
+def test_legacy_base_reads_in_full(spark, sparse_indexes):
+    """A base written without partitionBy has no id_part column to prune
+    on: any ``parts`` reads the whole base, plus the delta."""
+    from spark_sql_perf_spark.streaming.dedup import _INDEX_RELS, read_index_relation
+
+    legacy = sparse_indexes["legacy"]
+    for rel in _INDEX_RELS:
+        want = sorted(
+            _rows(spark.read.parquet(f"{legacy}/{rel}"))
+            + _rows(spark.read.parquet(f"{legacy}/{rel}__delta"))
+        )
+        assert want
+        for parts in (None, [], [1, 2]):
+            got = _rows(read_index_relation(spark, legacy, rel, parts=parts))
+            assert got == want, (rel, parts)
+
+
+def test_pruned_open_launches_no_spark_job(spark, grown_index):
+    """Opening is metadata work: with a declared schema and at most 32
+    directories to list, a pruned open (delta present) runs no Spark
+    job; a full open may run the one 64-directory listing job."""
+    from spark_sql_perf_spark.streaming.dedup import _INDEX_RELS, read_index_relation
+
+    for rel in _INDEX_RELS:
+        for parts in ([5], list(range(0, 64, 2))):
+            before = _job_count(spark)
+            read_index_relation(spark, grown_index, rel, parts=parts)
+            assert _job_count(spark) - before == 0, (rel, len(parts))
+        before = _job_count(spark)
+        read_index_relation(spark, grown_index, rel)
+        assert _job_count(spark) - before <= 1, rel
