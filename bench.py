@@ -94,6 +94,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from spark_sql_perf_spark import memo  # noqa: E402
 from spark_sql_perf_spark.operators import QUERIES  # noqa: E402
 from spark_sql_perf_spark.session import build_session  # noqa: E402
 
@@ -463,6 +464,13 @@ NOTES = [
     " regardless: every sf0.1 table is a single parquet file with ONE"
     " row group, so scan stages are 1 task at any core count and the"
     " residue is driver-bound constants.",
+    "r15 storage basis: every execution (timed sample, WARM_IN and the"
+    " flagship warmup) is followed by memo.release_all(), OUTSIDE the"
+    " timer, so the storage a query's materialized intermediates hold"
+    " is 0 bytes after each sample and no sample or later query reads"
+    " another's checkpoint. The timed region (build + noop consume) is"
+    " unchanged; before r15 the checkpoints of d2, d10 and the other"
+    " materializing queries stayed in executor storage until exit.",
     "q1_pricing_summary is the most scan-bandwidth-bound headline query"
     " and its min-of-N wobbles hardest when the page cache is cold"
     " relative to the join-shaped calibration peers (r9: +17% normalized"
@@ -481,6 +489,20 @@ SHIFT_RECEIPT = 0.10
 def consume(df) -> None:
     """Execute fully without collecting (noop datasource sink)."""
     df.write.format("noop").mode("overwrite").save()
+
+
+def sample_query(spark, sf_dir: str, fn, n: int) -> list[float]:
+    """n timed executions of one query builder: build + consume per
+    sample. The storage the query's materialized intermediates hold is
+    released after each sample, outside the timer, so no sample reads
+    another's checkpoint and nothing stays held between queries."""
+    out = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        consume(fn(spark, sf_dir))
+        out.append(round(time.perf_counter() - t0, 3))
+        memo.release_all()
+    return out
 
 
 def _this_round() -> int:
@@ -663,25 +685,17 @@ def main() -> None:
     spark = build_session(app_name="spark-sql-perf-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    consume(QUERIES["flagship_star_agg"](spark, sf_dir))  # warmup (JIT/codegen)
-
-    def sample_fn(fn, n: int) -> list[float]:
-        out = []
-        for _ in range(n):
-            t0 = time.perf_counter()
-            consume(fn(spark, sf_dir))
-            out.append(round(time.perf_counter() - t0, 3))
-        return out
+    # warmup (JIT/codegen), untimed
+    sample_query(spark, sf_dir, QUERIES["flagship_star_agg"], 1)
 
     def sample(name: str, n: int) -> list[float]:
-        return sample_fn(QUERIES[name], n)
+        return sample_query(spark, sf_dir, QUERIES[name], n)
 
     def first_pass(name: str) -> list[float]:
         # WARM_IN queries run unrecorded executions first (JIT warm-in;
         # see the WARM_IN note) — once per bench process, so the later
         # variance re-samples are already warm by construction
-        for _ in range(WARM_IN.get(name, 0)):
-            consume(QUERIES[name](spark, sf_dir))
+        sample(name, WARM_IN.get(name, 0))
         return sample(name, 5)
 
     samples: dict[str, list[float]] = {name: first_pass(name) for name in HEADLINE}
@@ -693,7 +707,9 @@ def main() -> None:
     # the headline set (they are calibration instruments, not operators
     # — keeping them out of ``queries`` and ``value`` preserves
     # cross-round comparability of both).
-    thermo_samples = {n: sample_fn(fn, 8) for n, fn in THERMOMETERS.items()}
+    thermo_samples = {
+        n: sample_query(spark, sf_dir, fn, 8) for n, fn in THERMOMETERS.items()
+    }
     thermo = {n: round(min(s), 3) for n, s in thermo_samples.items()}
 
     # Variance receipt (r5 lesson: sim1 +35% / e3 +12% normalized on

@@ -39,8 +39,12 @@ def tune_session(spark: SparkSession) -> None:
     and may run stock defaults — 200 shuffle partitions and row-based
     toPandas are a large constant overhead per query at small SF and the
     reason a fixed verification time budget covers fewer queries. All of
-    these are runtime-settable and safe at any scale: AQE re-splits big
-    shuffles upward, so a lower floor only removes empty-task overhead.
+    these are runtime-settable. ``shuffle.partitions`` becomes a CAP of
+    ``defaultParallelism``: AQE only coalesces below it (skew-join
+    splitting aside, it never adds reducers), and
+    ``coalescePartitions.initialPartitionNum`` is left unset, so a large
+    shuffle on a session this engine does not own runs with at most
+    ``defaultParallelism`` reducers.
     """
     try:
         if spark.conf.get(_TUNED_FLAG, "") == "1":
@@ -48,12 +52,13 @@ def tune_session(spark: SparkSession) -> None:
     except Exception:
         pass
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Partition floor derives from the session's ACTUAL parallelism, not
-    # a literal: a hard-coded 32 overrode the env-derived value in
+    # The partition count derives from the session's ACTUAL parallelism,
+    # not a literal: a hard-coded 32 overrode the env-derived value in
     # externally-owned sessions and made the driver's $SPARK_GRAFT_CPUS
     # scaling probe meaningless (r13 VERDICT item 2 — an 8-core run
-    # still planned 32-way shuffles). AQE re-splits big shuffles upward,
-    # so this floor only removes empty-task overhead at any scale.
+    # still planned 32-way shuffles). It is the initial (and so the
+    # largest) post-shuffle partition count; AQE may only coalesce
+    # below it.
     spark.conf.set(
         "spark.sql.shuffle.partitions",
         str(spark.sparkContext.defaultParallelism),
@@ -70,8 +75,9 @@ def tune_session(spark: SparkSession) -> None:
     # its default (true). With false, AQE coalesces toward the 64 MB
     # advisory size, which at bench scale collapses post-shuffle stages to
     # ~1 partition and serializes them (~15% total slowdown at sf0.1); the
-    # empty-task overhead it was meant to shave is already handled by the
-    # 200->32 shuffle-partition floor above.
+    # empty-task overhead it was meant to shave is already handled by
+    # capping shuffle.partitions at defaultParallelism above (instead of
+    # the stock 200).
     spark.conf.set(_TUNED_FLAG, "1")
 
 
@@ -158,12 +164,13 @@ def fan_out(df: DataFrame, key: str = "id") -> DataFrame:
     scan parallelism derives from the input layout, not from a constant
     tuned for either scale (guide §2.5/§6). Only worth applying above
     compute-heavy per-row pipelines; for decode-bound scans the
-    exchange costs more than it frees (measured: q1 regressed)."""
+    exchange costs more than it frees (measured: q1 regressed).
+
+    Batch frames only: reading the partition count builds the physical
+    plan (``df.rdd``), which raises on a streaming frame, and any
+    planning error surfaces here rather than being swallowed."""
     sc = df.sparkSession.sparkContext
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:
-        return df
+    n = df.rdd.getNumPartitions()
     if 2 * n >= sc.defaultParallelism:
         return df
     return df.repartition(sc.defaultParallelism, key)

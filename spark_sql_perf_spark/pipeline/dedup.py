@@ -117,72 +117,159 @@ def d1_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# d2: MinHash + LSH banding + exact-jaccard verify (also covers d4)
+# the minhash kernel: 3-word shingles -> md5 -> linear permutations -> bands
 # ---------------------------------------------------------------------------
 
+# One definition per engine, shared by d2 (and through it d6, c7, c15),
+# d10, d11 and the at-rest streaming index: every relation is keyed on
+# `id`, so the one-shot and the incremental queries read the same index.
 
-def _shingles_df(corpus: DataFrame) -> DataFrame:
-    """(doc_id, sh): 3-word shingles per document (dedup happens later on
-    the 8-byte shingle hash, so no string-keyed distinct here)."""
+
+def _minhash_ctes_sql(src: str, p: str) -> str:
+    """DuckDB CTE chain src -> {p}hashed / {p}sigs / {p}bands for a
+    source CTE with columns (id, text). The prefix lets one query index
+    and probe two different relations with the SAME hash family (d10,
+    d11); d2 runs it once with an empty prefix."""
+    return f"""
+    {p}shingled AS (
+      SELECT id, string_split_regex(text, '\\s+') AS ws FROM {src}),
+    {p}shingles AS (
+      SELECT DISTINCT id,
+             unnest(list_transform(range(1, len(ws) - 1),
+                    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
+      FROM {p}shingled WHERE len(ws) >= 3),
+    {p}hashed AS (
+      SELECT DISTINCT id, {md5_hash32_sql('sh', 'mh')} % {_P} AS h
+      FROM {p}shingles),
+    {p}perms AS (
+      SELECT id,
+             {', '.join(f'(({a} * h + {b}) % {_P}) AS h{j}' for j, (a, b) in enumerate(_PERM))}
+      FROM {p}hashed),
+    {p}sigs AS (
+      SELECT id, {', '.join(f'MIN(h{j}) AS m{j}' for j in range(_N_HASHES))},
+             COUNT(*) AS n_sh
+      FROM {p}perms GROUP BY id),
+    {p}bands AS (
+      {' UNION ALL '.join(
+          f"SELECT id, {bi} AS band, md5(CAST(m{a} AS VARCHAR) || ',' || CAST(m{b} AS VARCHAR)) AS bh FROM {p}sigs"
+          for bi, (a, b) in enumerate(_BANDS))})"""
+
+
+def _minhash_hashed(corpus: DataFrame) -> DataFrame:
+    """The expensive leg of the minhash pipeline: shingle explode ->
+    per-shingle md5 -> distinct (id, h). Shingles are hashed to ints
+    BEFORE the distinct, so the dedup shuffle and every downstream join
+    move 8-byte longs, never shingle strings."""
     ws = F.split("text", r"\s+")
     shingles = F.expr(
         "transform(sequence(1, size(ws) - 2),"
         " i -> concat_ws(' ', element_at(ws, i), element_at(ws, i+1), element_at(ws, i+2)))"
     )
     return (
-        corpus.select("doc_id", ws.alias("ws"))
+        corpus.select("id", ws.alias("ws"))
         .where(F.size("ws") >= 3)
-        .select("doc_id", F.explode(shingles).alias("sh"))
+        .select("id", F.explode(shingles).alias("sh"))
+        .select("id", (md5_hash32("sh", "mh") % _P).alias("h"))
+        .distinct()
     )
 
 
-_SHINGLES_SQL = """
-    shingled AS (
-      SELECT doc_id, string_split_regex(text, '\\s+') AS ws FROM corpus),
-    shingles AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(ws) - 1),
-                    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-      FROM shingled WHERE len(ws) >= 3)
-"""
+def _sigs_from_hashed(hashed: DataFrame) -> DataFrame:
+    """(id, m0..m5, n_sh): one md5 per shingle; the other minhash
+    functions are linear permutations of it. n_sh is the shingle-set
+    size the exact-jaccard verify divides by."""
+    return hashed.select(
+        "id",
+        *[
+            ((F.lit(a) * F.col("h") + F.lit(b)) % _P).alias(f"h{j}")
+            for j, (a, b) in enumerate(_PERM)
+        ],
+    ).groupBy("id").agg(
+        *[F.min(f"h{j}").alias(f"m{j}") for j in range(_N_HASHES)],
+        F.count(F.lit(1)).alias("n_sh"),
+    )
+
+
+def _bands_from_sigs(sigs: DataFrame) -> DataFrame:
+    """(id, band, bh): one row per (doc, band) via explode — a union
+    would recompute the signature aggregation once per band."""
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(bi).alias("band"),
+                F.md5(
+                    F.concat(
+                        F.col(f"m{a}").cast("string"),
+                        F.lit(","),
+                        F.col(f"m{b}").cast("string"),
+                    )
+                ).alias("bh"),
+            )
+            for bi, (a, b) in enumerate(_BANDS)
+        ]
+    )
+    return sigs.select("id", F.explode(band_structs).alias("s")).select(
+        "id", F.col("s.band").alias("band"), F.col("s.bh").alias("bh")
+    )
+
+
+def _minhash_frames(corpus: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(hashed, sigs, bands) for an (id, text) frame — the Spark twin
+    of _minhash_ctes_sql, relation for relation. Lazy: right for
+    single-consumer callers (the streaming index writer)."""
+    hashed = _minhash_hashed(corpus)
+    sigs = _sigs_from_hashed(hashed)
+    return hashed, sigs, _bands_from_sigs(sigs)
+
+
+def _minhash_frames_materialized(
+    corpus: DataFrame,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """_minhash_frames with the two aggregate legs MATERIALIZED
+    (localCheckpoint, per invocation — recomputed from the parquet scan
+    every call; nothing is reused across calls). d2 and the probe
+    queries (d10/d11) consume hashed, sigs AND bands in one plan, and
+    Catalyst re-derives each from the scan: the r13 stage profile
+    showed the corpus shingle+md5+distinct pipeline executing twice per
+    probe (two identical 2.6 MB exchanges, each a ~1.2 s single-task
+    stage at sf0.1) and the batch side twice more. Materializing hashed
+    and sigs makes every consumer read the computed relation instead —
+    exactly the at-rest production layout, where the index relations
+    are parquet, computed once (guide §1.2: don't compute things twice;
+    §3.3: materialize an intermediate consumed by several joins). The
+    shingle explode + md5 is a compute-heavy per-row pipeline fused
+    into the scan, so the single-row-group scan fans out first."""
+    hashed = memo.materialize(_minhash_hashed(_fan_out(corpus)), eager=False)
+    sigs = memo.materialize(_sigs_from_hashed(hashed), eager=False)
+    return hashed, sigs, _bands_from_sigs(sigs)
+
+
+# ---------------------------------------------------------------------------
+# d2: MinHash + LSH banding + exact-jaccard verify (also covers d4)
+# ---------------------------------------------------------------------------
 
 
 # d2's full CTE chain through the verified near-dup `pairs` relation —
 # shared by d2's oracle and d6's connected-components oracle
 _D2_PAIR_CTES = f"""{_CORPUS_SQL},
-    {_SHINGLES_SQL},
-    hashed AS (
-      SELECT DISTINCT doc_id, {md5_hash32_sql('sh', 'mh')} % {_P} AS h
-      FROM shingles),
-    perms AS (
-      SELECT doc_id,
-             {', '.join(f'(({a} * h + {b}) % {_P}) AS h{j}' for j, (a, b) in enumerate(_PERM))}
-      FROM hashed),
-    sigs AS (
-      SELECT doc_id, {', '.join(f'MIN(h{j}) AS m{j}' for j in range(_N_HASHES))},
-             COUNT(*) AS n_sh
-      FROM perms GROUP BY doc_id),
-    bands AS (
-      {' UNION ALL '.join(
-          f"SELECT doc_id, {bi} AS band, md5(CAST(m{a} AS VARCHAR) || ',' || CAST(m{b} AS VARCHAR)) AS bh FROM sigs"
-          for bi, (a, b) in enumerate(_BANDS))}),
+    docs AS (SELECT doc_id AS id, text FROM corpus),
+    {_minhash_ctes_sql('docs', '')},
     cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      SELECT DISTINCT a.id AS id_a, b.id AS id_b
       FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-      WHERE a.doc_id < b.doc_id),
+      WHERE a.id < b.id),
     common AS (
       SELECT c.id_a, c.id_b, COUNT(*) AS n_common
       FROM cand c
-        JOIN hashed sa ON sa.doc_id = c.id_a
-        JOIN hashed sb ON sb.doc_id = c.id_b AND sb.h = sa.h
+        JOIN hashed sa ON sa.id = c.id_a
+        JOIN hashed sb ON sb.id = c.id_b AND sb.h = sa.h
       GROUP BY c.id_a, c.id_b),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM hashed GROUP BY doc_id),
     pairs AS (
       SELECT id_a, id_b,
              ROUND(CAST(n_common AS DOUBLE) / (na.n_sh + nb.n_sh - n_common), 6) AS jaccard
       FROM common
-        JOIN sizes na ON na.doc_id = id_a
-        JOIN sizes nb ON nb.doc_id = id_b
+        JOIN sigs na ON na.id = id_a
+        JOIN sigs nb ON nb.id = id_b
       WHERE CAST(n_common AS DOUBLE) / (na.n_sh + nb.n_sh - n_common)
             >= {_JACCARD_THRESHOLD})"""
 
@@ -205,64 +292,13 @@ def d2_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash dedup run at 100 TB (candidates ~ near-dups, not |docs|^2).
     """
     corpus = _corpus(spark, sf_dir, suffix="planted near duplicate suffix")
-    # Hash shingles to ints BEFORE the distinct: the dedup shuffle and
-    # every downstream join moves 8-byte longs, never shingle strings.
-    # One md5 per shingle; the other 5 minhash functions are linear
-    # permutations of it. The shingle explode + md5 is a compute-heavy
-    # per-row pipeline fused into the scan, so fan the single-row-group
-    # scan out first (fan_out is a no-op on an already-parallel scan).
-    #
-    # hashed feeds three consumers (perms->sigs plus both sides of the
-    # exact-jaccard verify join) and sigs two (bands' explode self-join,
-    # sizes) — MATERIALIZE both per invocation (localCheckpoint,
-    # recomputed from the parquet scan on every call; the d10/d11
-    # pattern) so Catalyst reads the computed relation per consumer
-    # instead of re-deriving the shingle pipeline (guide §1.2/§3.3).
-    # Nothing is reused across invocations: a bench min-of-N loop or an
-    # oracle sweep pays the full shingle->minhash recomputation each
-    # sample (the r13 verdict retired the former cross-call memo here).
-    hashed = memo.materialize(
-        _shingles_df(_fan_out(corpus, key="doc_id"))
-        .select("doc_id", (md5_hash32("sh", "mh") % _P).alias("h"))
-        .distinct(),
-        eager=False,
+    # the shared kernel, materialized per call: hashed feeds sigs plus
+    # both sides of the verify join, sigs feeds bands and the sizes
+    hashed, sigs, bands = _minhash_frames_materialized(
+        corpus.select(F.col("doc_id").alias("id"), "text")
     )
-    perms = hashed.select(
-        "doc_id",
-        *[
-            ((F.lit(a) * F.col("h") + F.lit(b)) % _P).alias(f"h{j}")
-            for j, (a, b) in enumerate(_PERM)
-        ],
-    )
-    sigs = memo.materialize(
-        perms.groupBy("doc_id").agg(
-            *[F.min(f"h{j}").alias(f"m{j}") for j in range(_N_HASHES)],
-            F.count(F.lit(1)).alias("n_sh"),
-        ),
-        eager=False,
-    )
-    # one row per (doc, band) via explode — a union would recompute the
-    # signature aggregation once per band.
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.md5(
-                    F.concat(
-                        F.col(f"m{a}").cast("string"),
-                        F.lit(","),
-                        F.col(f"m{b}").cast("string"),
-                    )
-                ).alias("bh"),
-            )
-            for bi, (a, b) in enumerate(_BANDS)
-        ]
-    )
-    bands = (
-        sigs.select("doc_id", F.explode(band_structs).alias("s"))
-        .select("doc_id", F.col("s.band").alias("band"), F.col("s.bh").alias("bh"))
-    )
-
+    # the candidate self-join and the verify stay shuffled: both sides
+    # are the whole corpus (probe_with_index broadcasts a small batch)
     left = bands.alias("a")
     right = bands.alias("b")
     cand = (
@@ -270,29 +306,27 @@ def d2_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             right,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+            & (F.col("a.id") < F.col("b.id")),
         )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
 
     sa = hashed.alias("sa")
     sb = hashed.alias("sb")
     common = (
-        cand.join(sa, F.col("sa.doc_id") == F.col("id_a"))
-        .join(sb, (F.col("sb.doc_id") == F.col("id_b")) & (F.col("sb.h") == F.col("sa.h")))
+        cand.join(sa, F.col("sa.id") == F.col("id_a"))
+        .join(sb, (F.col("sb.id") == F.col("id_b")) & (F.col("sb.h") == F.col("sa.h")))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    # shingle-set sizes already live in sigs (n_sh) — reuse instead of a
-    # second groupBy over the hashed relation
-    sizes = sigs.select("doc_id", "n_sh")
+    sizes = sigs.select("id", "n_sh")
     jac = F.col("n_common").cast("double") / (
         F.col("na.n_sh") + F.col("nb.n_sh") - F.col("n_common")
     )
     return (
-        common.join(sizes.alias("na"), F.col("na.doc_id") == F.col("id_a"))
-        .join(sizes.alias("nb"), F.col("nb.doc_id") == F.col("id_b"))
+        common.join(sizes.alias("na"), F.col("na.id") == F.col("id_a"))
+        .join(sizes.alias("nb"), F.col("nb.id") == F.col("id_b"))
         .where(jac >= _JACCARD_THRESHOLD)
         .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
     )
@@ -1079,118 +1113,6 @@ def covered_word_sets(words: DataFrame, k: int = _D8_K) -> DataFrame:
 # against that index. Work per batch is proportional to batch size +
 # band-bucket collisions, never corpus pairs, and the corpus index
 # never reshuffles.
-
-
-def _minhash_ctes_sql(src: str, p: str) -> str:
-    """DuckDB CTE chain src -> {p}hashed / {p}sigs / {p}bands for a
-    source CTE with columns (id, text) — d2's pipeline parameterized by
-    source and prefix so the d10 oracle can index and probe two
-    different relations with the SAME hash family."""
-    return f"""
-    {p}shingled AS (
-      SELECT id, string_split_regex(text, '\\s+') AS ws FROM {src}),
-    {p}shingles AS (
-      SELECT DISTINCT id,
-             unnest(list_transform(range(1, len(ws) - 1),
-                    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-      FROM {p}shingled WHERE len(ws) >= 3),
-    {p}hashed AS (
-      SELECT DISTINCT id, {md5_hash32_sql('sh', 'mh')} % {_P} AS h
-      FROM {p}shingles),
-    {p}perms AS (
-      SELECT id,
-             {', '.join(f'(({a} * h + {b}) % {_P}) AS h{j}' for j, (a, b) in enumerate(_PERM))}
-      FROM {p}hashed),
-    {p}sigs AS (
-      SELECT id, {', '.join(f'MIN(h{j}) AS m{j}' for j in range(_N_HASHES))},
-             COUNT(*) AS n_sh
-      FROM {p}perms GROUP BY id),
-    {p}bands AS (
-      {' UNION ALL '.join(
-          f"SELECT id, {bi} AS band, md5(CAST(m{a} AS VARCHAR) || ',' || CAST(m{b} AS VARCHAR)) AS bh FROM {p}sigs"
-          for bi, (a, b) in enumerate(_BANDS))})"""
-
-
-
-
-def _minhash_hashed(corpus: DataFrame) -> DataFrame:
-    """The expensive leg of the minhash pipeline: shingle explode ->
-    per-shingle md5 -> distinct (id, h)."""
-    ws = F.split("text", r"\s+")
-    shingles = F.expr(
-        "transform(sequence(1, size(ws) - 2),"
-        " i -> concat_ws(' ', element_at(ws, i), element_at(ws, i+1), element_at(ws, i+2)))"
-    )
-    return (
-        corpus.select("id", ws.alias("ws"))
-        .where(F.size("ws") >= 3)
-        .select("id", F.explode(shingles).alias("sh"))
-        .select("id", (md5_hash32("sh", "mh") % _P).alias("h"))
-        .distinct()
-    )
-
-
-def _sigs_from_hashed(hashed: DataFrame) -> DataFrame:
-    return hashed.select(
-        "id",
-        *[
-            ((F.lit(a) * F.col("h") + F.lit(b)) % _P).alias(f"h{j}")
-            for j, (a, b) in enumerate(_PERM)
-        ],
-    ).groupBy("id").agg(
-        *[F.min(f"h{j}").alias(f"m{j}") for j in range(_N_HASHES)],
-        F.count(F.lit(1)).alias("n_sh"),
-    )
-
-
-def _bands_from_sigs(sigs: DataFrame) -> DataFrame:
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.md5(
-                    F.concat(
-                        F.col(f"m{a}").cast("string"),
-                        F.lit(","),
-                        F.col(f"m{b}").cast("string"),
-                    )
-                ).alias("bh"),
-            )
-            for bi, (a, b) in enumerate(_BANDS)
-        ]
-    )
-    return sigs.select("id", F.explode(band_structs).alias("s")).select(
-        "id", F.col("s.band").alias("band"), F.col("s.bh").alias("bh")
-    )
-
-
-def _minhash_frames(corpus: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(hashed, sigs, bands) for an (id, text) frame — the Spark twin
-    of _minhash_ctes_sql (d2's inline pipeline, parameterized)."""
-    hashed = _minhash_hashed(corpus)
-    sigs = _sigs_from_hashed(hashed)
-    return hashed, sigs, _bands_from_sigs(sigs)
-
-
-def _minhash_frames_materialized(
-    corpus: DataFrame,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """_minhash_frames with the two aggregate legs MATERIALIZED
-    (localCheckpoint, per invocation — recomputed from the parquet scan
-    every call). The lazy form is correct for single-consumer callers
-    (the streaming index writer), but the probe queries (d10/d11)
-    consume hashed, sigs AND bands in one plan, and Catalyst re-derives
-    each from the scan: the r13 stage profile showed the corpus
-    shingle+md5+distinct pipeline executing twice per probe (two
-    identical 2.6 MB exchanges, each a ~1.2 s single-task stage at
-    sf0.1) and the batch side twice more. Materializing hashed and sigs
-    makes every consumer read the computed relation instead — exactly
-    the at-rest production layout, where the index relations are
-    parquet, computed once (guide §1.2: don't compute things twice;
-    §3.3: materialize an intermediate consumed by several joins)."""
-    hashed = memo.materialize(_minhash_hashed(_fan_out(corpus)), eager=False)
-    sigs = memo.materialize(_sigs_from_hashed(hashed), eager=False)
-    return hashed, sigs, _bands_from_sigs(sigs)
 
 
 def _materialize_concurrently(

@@ -37,8 +37,10 @@ DEFAULT_CONF: dict[str, str] = {
     # Scans: keep partitions memory-sized; 128m is right for local and
     # cluster alike (executors get many of these).
     "spark.sql.files.maxPartitionBytes": "134217728",
-    # Don't let tiny dim tables produce 200 shuffle partitions by default;
-    # AQE coalesces down, this is just the ceiling.
+    # Don't let tiny dim tables produce 200 shuffle partitions by default.
+    # This is the initial post-shuffle partition count and so a cap: AQE
+    # only coalesces below it (coalescePartitions.initialPartitionNum is
+    # unset); skew-join splitting aside, it never adds reducers.
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     # Prefer shuffled-hash over sort-merge when the planner's size

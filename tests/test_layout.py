@@ -1,4 +1,5 @@
-"""Bucketing (shuffle-free joins) and salting (skew spreading) tests."""
+"""Bucketing (shuffle-free joins), salting (skew spreading) and scan
+fan-out tests."""
 
 from __future__ import annotations
 
@@ -188,3 +189,37 @@ def test_partitioned_write_not_null_partition_column(spark, tmp_path):
     dirs = os.listdir(f"{loc}/store_returns")
     assert not any("HIVE_DEFAULT_PARTITION" in d for d in dirs), dirs
     assert any(d.startswith("sr_returned_date_sk=") for d in dirs)
+
+
+def test_fan_out_hash_partitions_a_narrow_frame(spark):
+    from spark_sql_perf_spark.catalog import fan_out
+
+    dp = spark.sparkContext.defaultParallelism
+    df = spark.range(40, numPartitions=1).select(F.col("id").alias("key"))
+    out = fan_out(df, key="key")
+    assert out.rdd.getNumPartitions() == dp
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(key#" in plan and f", {dp})" in plan, plan
+    assert sorted(r.key for r in out.collect()) == list(range(40))
+
+
+def test_fan_out_leaves_a_parallel_frame_alone(spark):
+    from spark_sql_perf_spark.catalog import fan_out
+
+    dp = spark.sparkContext.defaultParallelism
+    for n in {(dp + 1) // 2, dp}:
+        df = spark.range(40, numPartitions=n).select(F.col("id").alias("key"))
+        assert fan_out(df, key="key") is df
+
+
+def test_fan_out_does_not_swallow_planning_errors(spark):
+    """A frame that cannot be planned as a batch (here a streaming one)
+    raises instead of coming back unchanged."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from spark_sql_perf_spark.catalog import fan_out
+
+    stream = spark.readStream.format("rate").load()
+    with pytest.raises(AnalysisException):
+        fan_out(stream, key="value")

@@ -108,6 +108,38 @@ def test_runner_releases_storage_every_iteration(spark, tmp_path):
             spark.catalog.dropTempView(name)
 
 
+def test_bench_sampler_releases_storage_after_every_sample(spark, monkeypatch):
+    """bench.py's min-of-N loop (and tools/minibench.py) sample through
+    ``bench.sample_query``: what a sample materialized is freed before
+    the next one starts, so nothing is held between samples or after
+    the query."""
+    import bench
+    from spark_sql_perf_spark import memo
+    from spark_sql_perf_spark.operators import QUERIES
+
+    memo.release_all()
+    before = _storage_state(spark)
+    held_after_consume = []
+    real_consume = bench.consume
+
+    def consume(df):
+        real_consume(df)
+        held_after_consume.append(len(memo._TRACKED))
+
+    monkeypatch.setattr(bench, "consume", consume)
+    times = bench.sample_query(
+        spark, SF_DIR_TINY, QUERIES["d2_dedup_minhash_lsh"], 2
+    )
+    assert len(times) == 2 and all(t > 0 for t in times)
+    # each sample did hold materialized frames when its consume ended
+    assert len(held_after_consume) == 2 and all(held_after_consume)
+    rdds, cache_empty, views = _storage_state(spark)
+    assert not memo._TRACKED
+    assert rdds <= before[0], f"still persisted: {rdds - before[0]}"
+    assert cache_empty, "cache manager not empty"
+    assert views == before[2]
+
+
 def _code_calls(path: str) -> list[tuple[int, str]]:
     """``localCheckpoint(``, ``.cache()`` and ``.persist(`` calls in
     ``path``'s code tokens (comments and strings never match)."""
