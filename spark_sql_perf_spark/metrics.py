@@ -16,15 +16,36 @@ Two fidelity levels:
   cumulative-time-per-subtree semantics, one Catalyst re-plan per node).
   O(n_subtrees x query cost): opt-in, like the reference's
   includeBreakdown flag.
+- `job_step(spark, name)` — names the Spark jobs a block launches, so
+  the status store can group a run's jobs by library step.
 """
 
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+_JOB_DESCRIPTION = "spark.job.description"
+
+
+@contextmanager
+def job_step(spark: SparkSession, name: str) -> Iterator[None]:
+    """Set ``spark.job.description`` to ``name`` for the jobs launched
+    inside the block (a thread-local property: broadcast and AQE stage
+    jobs inherit it), then restore the previous value. Inside a
+    streaming ``foreachBatch`` the previous value is the engine's own
+    batch description, which must survive the step."""
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty(_JOB_DESCRIPTION)
+    sc.setLocalProperty(_JOB_DESCRIPTION, name)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(_JOB_DESCRIPTION, previous)
 
 
 @dataclass

@@ -26,9 +26,18 @@ from pyspark.sql.types import (
 )
 
 from .. import memo
+from ..metrics import job_step
 from ..operators.registry import query
-from ..pipeline.dedup import _N_HASHES
-from .sink import _BUCKET, _with_bucket, merge_into_buckets
+from ..pipeline.dedup import (
+    _N_HASHES,
+    _bands_from_sigs,
+    _minhash_frames,
+    _minhash_hashed,
+    _sigs_from_hashed,
+    probe_candidates,
+    probe_with_index,
+)
+from .sink import _BUCKET, merge_into_buckets
 from .windows import stream_events
 
 # bucket count shared by the decision merge and the bucket-pruned
@@ -136,9 +145,10 @@ def stream_documents(
 # footer-reading Spark job per read, and Spark lists more than
 # spark.sql.sources.parallelPartitionDiscovery.threshold (32) paths or
 # subdirectories with a distributed listing job (one task per
-# directory). A pruned open of at most 32 parts, and the flat delta,
-# therefore launch no Spark job; a full open of the 64-directory base
-# launches the one listing job.
+# directory). The id_part directories are already listed on the driver,
+# so the base is opened in chunks of at most that many directories,
+# unioned: a full or pruned open, and the flat delta, launch no Spark
+# job.
 _N_ID_PARTS = 64
 _ID_PART = "id_part"
 
@@ -188,7 +198,6 @@ def build_probe_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     a production-sized index would let compact_index's byte-targeted
     rewrite pick the within-directory file count."""
     from ..catalog import table
-    from ..pipeline.dedup import _minhash_frames
 
     idx = table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id"), F.lower("text").alias("text")
@@ -226,12 +235,13 @@ def read_index_relation(
     ``parts`` (a list of id_part values) restricts the base to those
     parts: only their existing directories are opened (``basePath``
     keeps id_part a partition column) and ``id_part IN parts`` still
-    filters the scan, so the plan carries it as a partition filter. A
-    pruned open of at most 32 directories launches no Spark job; a full
-    open lists the whole base (module note). The delta is bounded by
-    the compaction cadence and is always read in full. A legacy base
-    written without partitionBy has no id_part column and is read in
-    full whatever ``parts`` says; decisions are identical either way."""
+    filters the scan, so the plan carries it as a partition filter. The
+    opened directories are split into chunks the driver lists itself
+    (module note), so no open launches a Spark job. The delta is
+    bounded by the compaction cadence and is always read in full. A
+    legacy base written without partitionBy has no id_part column and
+    is read in full whatever ``parts`` says; decisions are identical
+    either way."""
     schema = _INDEX_RELS[rel]
     base = f"{index_dir}/{rel}"
     fs, Path = _index_fs(spark, index_dir)
@@ -241,10 +251,15 @@ def read_index_relation(
     else:
         with_part = StructType([*schema, StructField(_ID_PART, IntegerType())])
         reader = spark.read.schema(with_part).option("basePath", base)
-        if parts is None:
-            out = reader.parquet(base)
-        else:
-            out = reader.parquet(*(dirs[p] for p in sorted(set(parts)) if p in dirs))
+        wanted = sorted(dirs) if parts is None else sorted(set(parts) & set(dirs))
+        chunk = max(
+            1, int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+        )
+        paths = [dirs[p] for p in wanted]
+        out = reader.parquet(*paths[:chunk])
+        for i in range(chunk, len(paths), chunk):
+            out = out.unionByName(reader.parquet(*paths[i : i + chunk]))
+        if parts is not None:
             out = out.where(F.col(_ID_PART).isin(parts))
         out = out.select(*schema.fieldNames())
     delta = _delta_dir(index_dir, rel)
@@ -307,13 +322,34 @@ def index_file_counts(spark: SparkSession, index_dir: str) -> dict[str, int]:
 
 def grow_index_append(spark: SparkSession, index_dir: str, novels: DataFrame) -> None:
     """Append accepted novels (an (id, text) frame) to the at-rest
-    index's ``__delta`` sidecars, each relation INDEPENDENTLY guarded:
-    hashed/sigs at id granularity, bands at (id, band) granularity
-    (r12 ADVICE — an anti-join of the new band rows against the LIVE
-    band rows, so a replay REPAIRS an id left with partial band
-    coverage by a non-rename-atomic object store instead of skipping
-    it; on a rename-atomic filesystem the single-file delta append
-    makes that state unreachable, so the finer guard is a repair path).
+    index's ``__delta`` sidecars (see _append_novels): the novel ids
+    are materialized once and the novels' minhash frames are built
+    lazily from ``novels``."""
+    with job_step(spark, "grow.novels"):
+        novel_ids = memo.materialize(novels.select("id").distinct(), eager=True)
+    try:
+        _append_novels(spark, index_dir, novel_ids, _minhash_frames(novels))
+    finally:
+        memo.release(novel_ids)
+
+
+def _append_novels(
+    spark: SparkSession,
+    index_dir: str,
+    novel_ids: DataFrame,
+    frames: tuple[DataFrame, DataFrame, DataFrame],
+) -> None:
+    """Append the rows of the materialized ``novel_ids`` (distinct ids)
+    from ``frames`` (hashed, sigs, bands: any superset of the novels,
+    e.g. the whole batch's) to the index's ``__delta`` sidecars, each
+    relation INDEPENDENTLY guarded: hashed/sigs at id granularity,
+    bands at (id, band) granularity (r12 ADVICE — an anti-join of the
+    new band rows against the LIVE band rows, so a replay REPAIRS an id
+    left with partial band coverage by a non-rename-atomic object store
+    instead of skipping it; on a rename-atomic filesystem the
+    single-file delta append makes that state unreachable, so the finer
+    guard is a repair path). Every relation's rows are restricted to
+    the novel ids, so no frame row of a non-novel id is ever appended.
 
     Per-relation guards (not one shared anti-join) are what make the
     three non-atomic appends converge under crash-and-replay: a crash
@@ -325,41 +361,29 @@ def grow_index_append(spark: SparkSession, index_dir: str, novels: DataFrame) ->
     ONE flat file, one rename — all of an id's rows inside), and
     replay completes exactly the missing ones.
 
-    Guard cost (r12 VERDICT task 5 — was three separate index scans
-    per batch): ONE Spark job over a rel-tagged union of the three
-    relations' guard columns — base partition-PRUNED to the novel ids'
-    id_part directories (a bounded driver-side list, <= _N_ID_PARTS
-    values) plus the small delta sidecars — broadcast-semi-filtered by
-    the batch-bounded novel ids; the result is materialized once and
-    the three append jobs anti-join against that tiny frozen frame
-    instead of re-scanning the index each."""
-    from ..pipeline.dedup import _minhash_frames
-
-    if novels.isEmpty():
-        # a fully-replayed batch accepts nothing: skip the guard scan
-        # + write jobs outright (isEmpty only touches the
-        # batch-bounded side)
-        return
-    novel_ids = memo.materialize(novels.select("id").distinct(), eager=True)
-    live = None
-    try:
+    Guard cost: the novel ids' id_part values are collected (a bounded
+    driver-side list, <= _N_ID_PARTS values; an empty list means no
+    novels and returns at once). ONE guard job reads a rel-tagged union
+    of the three relations' guard columns (base pruned to those parts,
+    plus the small delta sidecars), broadcast-semi-filtered by the novel
+    ids, and materializes it; each relation's append then anti-joins
+    against that tiny frozen frame and writes one file."""
+    with job_step(spark, "grow.parts"):
         parts = [
             r[0]
             for r in novel_ids.select(_id_part("id").alias("p"))
             .distinct()
             .collect()
         ]
-        frames = dict(zip(_INDEX_RELS, _minhash_frames(novels)))
+    if not parts:
+        return
 
-        def guard_read(rel: str) -> DataFrame:
-            df = read_index_relation(spark, index_dir, rel, parts=parts)
-            band = (
-                F.col("band")
-                if rel == "bands"
-                else F.lit(None).cast("int").alias("band")
-            )
-            return df.select(F.lit(rel).alias("rel"), F.col("id"), band)
+    def guard_read(rel: str) -> DataFrame:
+        df = read_index_relation(spark, index_dir, rel, parts=parts)
+        band = F.col("band") if rel == "bands" else F.lit(None).cast("int").alias("band")
+        return df.select(F.lit(rel).alias("rel"), F.col("id"), band)
 
+    with job_step(spark, "grow.guard"):
         live = memo.materialize(
             guard_read("hashed")
             .unionByName(guard_read("sigs"))
@@ -368,33 +392,32 @@ def grow_index_append(spark: SparkSession, index_dir: str, novels: DataFrame) ->
             .distinct(),
             eager=True,
         )
-        for rel in _INDEX_RELS:
+    try:
+        for rel, frame in zip(_INDEX_RELS, frames):
             if rel == "bands":
                 live_pairs = live.where(F.col("rel") == rel).select("id", "band")
-                to_append = frames[rel].join(
+                to_append = frame.join(F.broadcast(novel_ids), "id", "left_semi").join(
                     F.broadcast(live_pairs), ["id", "band"], "left_anti"
                 )
             else:
                 live_ids = live.where(F.col("rel") == rel).select("id")
                 missing = novel_ids.join(F.broadcast(live_ids), "id", "left_anti")
-                to_append = frames[rel].join(F.broadcast(missing), "id")
+                to_append = frame.join(F.broadcast(missing), "id")
             # coalesce(1) into the flat delta sidecar: the batch-bounded
             # append commits as ONE file rename, so each relation's
             # novel set is fully appended or absent — never split
-            # across directories (the partitioned-base alternative
-            # published one file per touched directory: 192/append at
-            # saturating batches, a 38x listing-tax multiplier the r13
-            # loop cells measured before this sidecar existed). Object
-            # stores without atomic rename keep the same mid-commit
-            # caveat as the upsert sink (sink.py docstring) — and the
-            # (id, band) bands guard above repairs exactly that state.
-            (
-                to_append.coalesce(1)
-                .write.mode("append")
-                .parquet(_delta_dir(index_dir, rel))
-            )
+            # across directories (module note). Object stores without
+            # atomic rename keep the same mid-commit caveat as the
+            # upsert sink (sink.py docstring) — and the (id, band)
+            # bands guard above repairs exactly that state.
+            with job_step(spark, f"grow.append.{rel}"):
+                (
+                    to_append.coalesce(1)
+                    .write.mode("append")
+                    .parquet(_delta_dir(index_dir, rel))
+                )
     finally:
-        memo.release(novel_ids, live)
+        memo.release(live)
 
 
 def probe_index_at_rest(
@@ -402,6 +425,7 @@ def probe_index_at_rest(
     index_dir: str,
     batch: DataFrame,
     exclude_self: bool = False,
+    bframes: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Partition-pruned probe of an (id, text) batch against the
     at-rest index (r12 VERDICT task 2): candidates are materialized
@@ -416,6 +440,11 @@ def probe_index_at_rest(
     UNION its small delta sidecar (read_index_relation), so decisions
     always include not-yet-compacted appends.
 
+    ``bframes`` is the batch's (hashed, sigs, bands), as for
+    probe_with_index: the grow loop passes frames it materialized once
+    and reuses them for the index append. The default builds them
+    lazily from ``batch``, so they are recomputed by each consumer.
+
     Returns (decisions, cand); ``cand`` is localCheckpointed — the
     caller must release it when the batch ends (the grow loop's
     finally block), or a long-running stream accumulates pinned blocks.
@@ -423,21 +452,18 @@ def probe_index_at_rest(
     Layouts without the id_part column (a legacy index) skip pruning
     and keep the full column-pruned scan — decisions are identical
     either way, asserted in test_streaming_probe.py."""
-    from ..pipeline.dedup import (
-        _minhash_frames,
-        probe_candidates,
-        probe_with_index,
-    )
-
     ibands = read_index_relation(spark, index_dir, "bands")
-    bframes = _minhash_frames(batch)
-    cand = memo.materialize(
-        probe_candidates(ibands, bframes[2], exclude_self), eager=True
-    )
-    parts = [
-        r[0]
-        for r in cand.select(_id_part("idx_id").alias("p")).distinct().collect()
-    ]
+    if bframes is None:
+        bframes = _minhash_frames(batch)
+    with job_step(spark, "probe.cand"):
+        cand = memo.materialize(
+            probe_candidates(ibands, bframes[2], exclude_self), eager=True
+        )
+    with job_step(spark, "probe.parts"):
+        parts = [
+            r[0]
+            for r in cand.select(_id_part("idx_id").alias("p")).distinct().collect()
+        ]
     ihashed = read_index_relation(spark, index_dir, "hashed", parts=parts)
     isigs = read_index_relation(spark, index_dir, "sigs", parts=parts)
     out = probe_with_index(
@@ -552,13 +578,14 @@ def compact_index(
         # coalesce into one task -> one file per directory (a
         # production-sized index raises _N_ID_PARTS rather than files
         # per directory — the directory is the pruning unit)
-        (
-            _with_id_part(df)
-            .repartition(max(n_target, 16), F.col(_ID_PART))
-            .write.mode("overwrite")
-            .partitionBy(_ID_PART)
-            .parquet(tmp)
-        )
+        with job_step(spark, "compact.rewrite"):
+            (
+                _with_id_part(df)
+                .repartition(max(n_target, 16), F.col(_ID_PART))
+                .write.mode("overwrite")
+                .partitionBy(_ID_PART)
+                .parquet(tmp)
+            )
         if fs.exists(Path(delta)):
             if not fs.rename(Path(delta), Path(delta_old)):
                 raise IOError(f"compact_index: could not stage {delta} aside")
@@ -613,8 +640,10 @@ def streaming_incremental_probe(
        table (not the in-flight recomputation, which on replay can see
        a half-grown index), and each of the three relation appends is
        independently guarded against that relation's live ids
-       (grow_index_append), so a crash at ANY point replays to the same
-       index — no duplicate (id, h) rows, no lost sigs/bands.
+       (_append_novels), so a crash at ANY point replays to the same
+       index — no duplicate (id, h) rows, no lost sigs/bands. The
+       appended rows come from the batch's own minhash frames,
+       filtered to those stored novel ids.
 
     The index frames are re-read from parquet inside every micro-batch
     — each batch must see the appends of the previous one.
@@ -646,7 +675,9 @@ def streaming_incremental_probe(
         )
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        with job_step(spark, "batch.empty"):
+            empty = batch_df.isEmpty()
+        if empty:
             # A zero-row micro-batch (empty arrival file) must be a
             # no-op BEFORE the merge: if it were the very first batch,
             # the merge would write no bucket partitions and the
@@ -663,74 +694,67 @@ def streaming_incremental_probe(
         batch = batch_df.select(
             F.col("doc_id").alias("id"), F.lower("text").alias("text")
         )
-        # fresh per micro-batch (the live index includes prior
-        # appends), hashed/sigs partition-pruned to the candidate ids'
-        # directories; cand rides pre-materialized into the probe plan
-        out, cand = probe_index_at_rest(
-            spark, index_dir, batch, exclude_self=grow_index
-        )
-        stored_novel_ids = None
+        bhashed = bsigs = out = cand = stored_novel_ids = None
         try:
-            if not grow_index:
-                # same explicit bucket count as the grow path (r12
-                # ADVICE: relying on the sink's default here let the two
-                # paths' decision tables silently diverge if either
-                # constant moved)
-                merge_into_buckets(
-                    out, target_dir, "batch_id", one_per_key,
-                    n_buckets=_N_DECISION_BUCKETS,
-                )
-                state["healthy"] = True
-                return
-            # Compute-once: the merge executes `out` twice
-            # (touched-bucket collect + winners write); localCheckpoint
-            # materializes the probe once. Replay SAFETY no longer rides
-            # on it — the commit ordering below does — it is purely the
-            # recompute guard. The blocks are released when the batch
-            # ends; a long-running stream must not accumulate one pinned
-            # RDD per micro-batch.
-            out = memo.materialize(out, eager=True)
+            # Compute-once: the batch's minhash kernel runs here, once.
+            # hashed and sigs are materialized (bands derive from sigs
+            # lazily) and feed the candidate join, the verification and
+            # the index append; the probe's decisions are materialized
+            # once too, since the merge reads them twice (touched-bucket
+            # collect + winners write). Every frame is released when the
+            # batch ends: a long-running stream must not accumulate
+            # pinned RDDs.
+            with job_step(spark, "batch.minhash"):
+                bhashed = memo.materialize(_minhash_hashed(batch), eager=False)
+                bsigs = memo.materialize(_sigs_from_hashed(bhashed), eager=True)
+            bframes = (bhashed, bsigs, _bands_from_sigs(bsigs))
+            # fresh per micro-batch (the live index includes prior
+            # appends), hashed/sigs partition-pruned to the candidate
+            # ids' directories
+            out, cand = probe_index_at_rest(
+                spark, index_dir, batch, exclude_self=grow_index, bframes=bframes
+            )
+            with job_step(spark, "probe.decide"):
+                out = memo.materialize(out, eager=True)
             # 1. COMMIT the decisions (replay-idempotent first-wins
-            # merge) BEFORE any index mutation.
-            merge_into_buckets(
+            # merge) BEFORE any index mutation. Same explicit bucket
+            # count on both paths (r12 ADVICE: relying on the sink's
+            # default let the two paths' decision tables silently
+            # diverge if either constant moved).
+            touched = merge_into_buckets(
                 out, target_dir, "batch_id", one_per_key,
                 n_buckets=_N_DECISION_BUCKETS,
             )
+            if not grow_index:
+                state["healthy"] = True
+                return
             # 2. Append novels derived from the STORED decisions — the
             # history a replay must honor, not the recomputation it
-            # must not — restricted to this batch's ids. The read is
-            # pruned to the batch's buckets (the sink's own O(touched
-            # buckets) contract — an unpruned scan would pay the whole
-            # stored history every batch) and MATERIALIZED once, so the
-            # three guard/append jobs downstream re-read a tiny frozen
-            # frame instead of re-scanning the decisions table each.
-            touched = [
-                r[0]
-                for r in _with_bucket(
-                    batch.select(F.col("id").alias("batch_id")),
-                    "batch_id",
-                    _N_DECISION_BUCKETS,
+            # must not — restricted to this batch's ids. The read
+            # declares the stored schema (out's columns plus the
+            # bucket) and is pruned to the merge's touched buckets (the
+            # sink's O(touched buckets) contract); with no touched list
+            # the target held nothing before this merge, so it holds
+            # this batch alone. It is MATERIALIZED once: the guard and
+            # the three appends downstream re-read a tiny frozen frame.
+            stored = spark.read.schema(
+                StructType([*out.schema, StructField(_BUCKET, LongType())])
+            ).parquet(target_dir)
+            if touched is not None:
+                stored = stored.where(F.col(_BUCKET).isin(touched))
+            with job_step(spark, "grow.novels"):
+                stored_novel_ids = memo.materialize(
+                    stored.where(F.col("is_novel"))
+                    .select(F.col("batch_id").alias("id"))
+                    .join(F.broadcast(batch.select("id")), "id", "left_semi"),
+                    eager=True,
                 )
-                .select(_BUCKET)
-                .distinct()
-                .collect()
-            ]
-            stored_novel_ids = memo.materialize(
-                spark.read.parquet(target_dir)
-                .where(F.col(_BUCKET).isin(touched))
-                .where(F.col("is_novel"))
-                .select(F.col("batch_id").alias("id"))
-                .join(F.broadcast(batch.select("id")), "id", "left_semi"),
-                eager=True,
-            )
-            grow_index_append(
-                spark, index_dir, batch.join(F.broadcast(stored_novel_ids), "id")
-            )
+            _append_novels(spark, index_dir, stored_novel_ids, bframes)
             if compact_every and (batch_id + 1) % compact_every == 0:
                 compact_index(spark, index_dir, max_files=compact_max_files)
             state["healthy"] = True
         finally:
-            memo.release(out, cand, stored_novel_ids)
+            memo.release(out, cand, stored_novel_ids, bsigs, bhashed)
 
     stream = stream_documents(spark, sf_dir, stream_dir, max_files_per_trigger)
     return (

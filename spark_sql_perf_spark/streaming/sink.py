@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..metrics import job_step
 from .windows import stream_events
 
 _BUCKET = "_bucket"
@@ -64,42 +65,53 @@ def merge_into_buckets(
     bucket_key: str,
     dedupe,
     n_buckets: int = 16,
-) -> None:
+) -> list[int] | None:
     """The shared touched-buckets MERGE machinery: bucket the batch,
     read ONLY the buckets its keys fall in, union with the batch (rows
     carry ``_is_new`` 1/0), apply ``dedupe`` (DataFrame -> DataFrame
     winner-picker), and dynamic-partition-overwrite exactly the touched
     buckets. The conf save/set/restore and the delete-then-rename commit
     subtleties live HERE once — both the upsert sink and the SCD2
-    CDC-apply ride the same code path."""
+    CDC-apply ride the same code path.
+
+    The target holds exactly what this merge writes (the batch's
+    columns plus ``_bucket``), so the existing buckets are read with
+    the bucketed batch's schema: no footer-inference job per merge.
+
+    Returns the touched buckets it collected, or None when the target
+    held no buckets yet (then the target now holds this batch alone),
+    so a caller reading the merged rows back needs no second collect."""
     spark = batch_df.sparkSession
-    batch = _with_bucket(batch_df, bucket_key, n_buckets).withColumn(
-        "_is_new", F.lit(1)
-    )
+    batch = _with_bucket(batch_df, bucket_key, n_buckets)
+    touched = None
     if _target_has_buckets(spark, target_dir):
-        touched = [r[0] for r in batch.select(_BUCKET).distinct().collect()]
+        with job_step(spark, "merge.touched"):
+            touched = [r[0] for r in batch.select(_BUCKET).distinct().collect()]
         if not touched:
-            return
+            return touched
         existing = (
-            spark.read.parquet(target_dir)
+            spark.read.schema(batch.schema)
+            .parquet(target_dir)
             .where(F.col(_BUCKET).isin(touched))
             .withColumn("_is_new", F.lit(0))
         )
-        merged = existing.unionByName(batch)
+        merged = existing.unionByName(batch.withColumn("_is_new", F.lit(1)))
     else:
-        merged = batch
+        merged = batch.withColumn("_is_new", F.lit(1))
     winners = dedupe(merged).drop("_is_new")
     saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     try:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            winners.repartition(max(1, min(n_buckets, 8)), _BUCKET)
-            .write.mode("overwrite")
-            .partitionBy(_BUCKET)
-            .parquet(target_dir)
-        )
+        with job_step(spark, "merge.write"):
+            (
+                winners.repartition(max(1, min(n_buckets, 8)), _BUCKET)
+                .write.mode("overwrite")
+                .partitionBy(_BUCKET)
+                .parquet(target_dir)
+            )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+    return touched
 
 
 def upsert_parquet_batch(

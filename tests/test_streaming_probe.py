@@ -578,3 +578,119 @@ def test_compact_index_preserves_probe_and_cuts_files(spark):
     assert not os.path.exists(f"{index_dir}/sigs__delta__old")
     assert not os.path.exists(f"{index_dir}/sigs__compact_tmp")
     assert read_index_relation(spark, index_dir, "sigs").count() == want_sigs
+
+
+@pytest.fixture(scope="module")
+def mixed_drain(spark):
+    """One arrival through the grow loop: near-dups of corpus docs
+    (suffix) mixed with fresh word-reversed novels. Returns the index
+    rows per relation before and after, the stored decisions, and the
+    (description, job group) of every job the drain ran."""
+    from spark_sql_perf_spark.catalog import table
+    from spark_sql_perf_spark.streaming.dedup import (
+        build_probe_index,
+        read_index_relation,
+        streaming_incremental_probe,
+    )
+
+    work = tempfile.mkdtemp(prefix="probe-mixed-")
+    index_dir = os.path.join(work, "index")
+    stream_dir = os.path.join(work, "arrivals")
+    target_dir = os.path.join(work, "decisions")
+    os.makedirs(stream_dir)
+    build_probe_index(spark, SF_DIR_TINY, index_dir)
+
+    docs = table(spark, SF_DIR_TINY, "documents")
+    meta = ["lang", "source", "n_chars"]
+    near = docs.where(F.col("doc_id") % 7 == 0).select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"),
+        F.concat(F.lower("text"), F.lit(" probe batch suffix")).alias("text"),
+        *meta,
+    )
+    novel = docs.where(F.col("doc_id") % 11 == 0).select(
+        (F.col("doc_id") + 2_000_000).alias("doc_id"),
+        F.array_join(F.reverse(F.split(F.lower("text"), r"\s+")), " ").alias("text"),
+        *meta,
+    )
+    path = os.path.join(work, "mixed.parquet")
+    near.unionAll(novel).coalesce(1).write.parquet(path)
+    part = [f for f in os.listdir(path) if f.endswith(".parquet")][0]
+    os.symlink(os.path.join(path, part), os.path.join(stream_dir, "arrival-0.parquet"))
+
+    def index_rows():
+        return {
+            rel: [tuple(r) for r in read_index_relation(spark, index_dir, rel).collect()]
+            for rel in ("hashed", "sigs", "bands")
+        }
+
+    def all_jobs():
+        jsc = spark.sparkContext._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(spark.sparkContext._jvm.java.util.ArrayList())
+        it = jobs.iterator()
+        while it.hasNext():
+            yield it.next()
+
+    before = index_rows()
+    seen = {j.jobId() for j in all_jobs()}
+    q = streaming_incremental_probe(
+        spark, SF_DIR_TINY, stream_dir, index_dir, target_dir,
+        max_files_per_trigger=1, grow_index=True,
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None, q.exception()
+    jobs = [
+        (
+            j.description().get() if j.description().isDefined() else None,
+            j.jobGroup().get() if j.jobGroup().isDefined() else None,
+        )
+        for j in all_jobs()
+        if j.jobId() not in seen
+    ]
+    decided = {
+        r["batch_id"]: r["is_novel"]
+        for r in spark.read.parquet(target_dir).select("batch_id", "is_novel").collect()
+    }
+    return {
+        "before": before,
+        "after": index_rows(),
+        "decided": decided,
+        "jobs": jobs,
+        "run_id": str(q.runId),
+    }
+
+
+def test_grow_loop_indexes_exactly_the_novels_of_a_mixed_arrival(mixed_drain):
+    """The append reuses the minhash frames of the WHOLE batch, so only
+    the stored novel ids keep near-dups out of the index: every
+    relation grows by exactly the ids decided novel, and no id (or
+    (id, h), (id, band) row) is indexed twice."""
+    decided, before, after = (mixed_drain[k] for k in ("decided", "before", "after"))
+    novel = {i for i, is_novel in decided.items() if is_novel}
+    assert novel and len(novel) < len(decided)  # both kinds in one arrival
+    assert any(i < 2_000_000 for i in decided if not decided[i])  # near-dups matched
+    for rel in ("hashed", "sigs", "bands"):
+        added = {row[0] for row in after[rel]} - {row[0] for row in before[rel]}
+        assert added == novel, rel
+        assert set(before[rel]) <= set(after[rel]), rel
+    assert len(after["sigs"]) == len({r[0] for r in after["sigs"]})
+    assert len(after["hashed"]) == len(set(after["hashed"]))
+    assert len(after["bands"]) == len({r[:2] for r in after["bands"]})
+
+
+def test_grow_loop_names_every_spark_job(mixed_drain):
+    """Every job the loop's foreachBatch submits (the streaming query's
+    job group) carries a step name, so a run can group its jobs by
+    step."""
+    import re
+
+    applied = [d for d, group in mixed_drain["jobs"] if group == mixed_drain["run_id"]]
+    assert applied
+    step = re.compile(r"(batch|probe|merge|grow|compact)\.[a-z.]+")
+    unnamed = [d for d in applied if not step.fullmatch(d or "")]
+    assert not unnamed, unnamed
+    assert {
+        "batch.minhash", "probe.cand", "probe.decide", "merge.write",
+        "grow.novels", "grow.guard", "grow.append.hashed", "grow.append.sigs",
+        "grow.append.bands",
+    } <= set(applied)
