@@ -109,7 +109,7 @@ def test_runner_releases_storage_every_iteration(spark, tmp_path):
 
 
 def test_bench_sampler_releases_storage_after_every_sample(spark, monkeypatch):
-    """bench.py's min-of-N loop (and tools/minibench.py) sample through
+    """bench.py's min-of-N loop (and `tools/ab.py time`) sample through
     ``bench.sample_query``: what a sample materialized is freed before
     the next one starts, so nothing is held between samples or after
     the query."""
