@@ -33,25 +33,34 @@ _REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 _COSTS_FILE = os.path.join(_REPO_DIR, "tools", "query_costs.json")
 
 
-def _correctness_files() -> list[str]:
+def _correctness_files(repo_dir: str = _REPO_DIR) -> list[str]:
     """Committed CORRECTNESS_r*.json paths, in round order.
 
     ``git ls-files`` keeps the docstring honest: an untracked or
     in-progress round file (e.g. one the driver writes before importing
     this module) must not count as history, or the never-verified-first
-    ordering collapses back to cheapest-first. Falls back to an on-disk
-    glob only when git is unavailable.
+    ordering collapses back to cheapest-first. git is trusted only when
+    ``repo_dir`` is the top of its own checkout: a tree exported inside
+    another checkout (``tools/ab.py`` exports under ``.perfbench/``)
+    would otherwise list the enclosing repository's files, which are
+    none of its own. Otherwise, or without git, an on-disk glob.
     """
-    try:
-        import subprocess
+    import subprocess
 
-        names = subprocess.run(
-            ["git", "-C", _REPO_DIR, "ls-files", "CORRECTNESS_r*.json"],
+    def git(*argv: str) -> str:
+        return subprocess.run(
+            ["git", "-C", repo_dir, *argv],
             capture_output=True, text=True, timeout=10, check=True,
-        ).stdout.split()
-        return sorted(os.path.join(_REPO_DIR, n) for n in names)
+        ).stdout
+
+    try:
+        top = git("rev-parse", "--show-toplevel").strip()
+        if os.path.realpath(top) == os.path.realpath(repo_dir):
+            names = git("ls-files", "CORRECTNESS_r*.json").split()
+            return sorted(os.path.join(repo_dir, n) for n in names)
     except Exception:
-        return sorted(glob.glob(os.path.join(_REPO_DIR, "CORRECTNESS_r*.json")))
+        pass
+    return sorted(glob.glob(os.path.join(repo_dir, "CORRECTNESS_r*.json")))
 
 
 # name -> round in which the implementation materially changed. A query
@@ -113,6 +122,12 @@ _IMPL_CHANGED: dict[str, int] = {
     "c6_sequence_packing": 15,
     "c12_token_budget_select": 15,
     "c13_e2e_mix": 15,
+    # r15: the incremental probe's verification runs on one exchange
+    # (tagged batch ids, candidate pairs and shingle hits, grouped per
+    # pair then per doc) instead of the per-stage broadcast chain and
+    # count_distinct; same rows as before at sf0.001 and sf0.01.
+    "d10_incremental_lsh_probe": 15,
+    "d11_grown_index_probe": 15,
 }
 
 

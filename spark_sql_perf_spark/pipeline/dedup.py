@@ -177,39 +177,27 @@ def _minhash_hashed(corpus: DataFrame) -> DataFrame:
 def _sigs_from_hashed(hashed: DataFrame) -> DataFrame:
     """(id, m0..m5, n_sh): one md5 per shingle; the other minhash
     functions are linear permutations of it. n_sh is the shingle-set
-    size the exact-jaccard verify divides by."""
-    return hashed.select(
-        "id",
-        *[
-            ((F.lit(a) * F.col("h") + F.lit(b)) % _P).alias(f"h{j}")
-            for j, (a, b) in enumerate(_PERM)
-        ],
+    size the exact-jaccard verify divides by. The fixed expressions are
+    parsed SQL fragments: one py4j call each, not one per operator."""
+    return hashed.selectExpr(
+        "id", *[f"(({a} * h + {b}) % {_P}) AS h{j}" for j, (a, b) in enumerate(_PERM)]
     ).groupBy("id").agg(
-        *[F.min(f"h{j}").alias(f"m{j}") for j in range(_N_HASHES)],
-        F.count(F.lit(1)).alias("n_sh"),
+        *[F.expr(f"min(h{j}) AS m{j}") for j in range(_N_HASHES)],
+        F.expr("count(1) AS n_sh"),
     )
 
 
 def _bands_from_sigs(sigs: DataFrame) -> DataFrame:
     """(id, band, bh): one row per (doc, band) via explode — a union
-    would recompute the signature aggregation once per band."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.md5(
-                    F.concat(
-                        F.col(f"m{a}").cast("string"),
-                        F.lit(","),
-                        F.col(f"m{b}").cast("string"),
-                    )
-                ).alias("bh"),
-            )
-            for bi, (a, b) in enumerate(_BANDS)
-        ]
+    would recompute the signature aggregation once per band. The band
+    structs are one parsed SQL fragment."""
+    band_structs = ", ".join(
+        f"struct({bi} AS band,"
+        f" md5(concat(CAST(m{a} AS STRING), ',', CAST(m{b} AS STRING))) AS bh)"
+        for bi, (a, b) in enumerate(_BANDS)
     )
-    return sigs.select("id", F.explode(band_structs).alias("s")).select(
-        "id", F.col("s.band").alias("band"), F.col("s.bh").alias("bh")
+    return sigs.selectExpr("id", f"explode(array({band_structs})) AS s").selectExpr(
+        "id", "s.band AS band", "s.bh AS bh"
     )
 
 
@@ -1311,17 +1299,35 @@ def probe_with_index(
     which throws on a streaming DataFrame — and pin one localCheckpoint
     per call in looping callers that never release them (the
     tools/scale_probe grow loops). Callers that want the materialized
-    batch side (d10/d11, the at-rest probe) pass bframes explicitly."""
+    batch side (d10/d11, the at-rest probe) pass bframes explicitly.
+
+    Verification is ONE exchange: three row sets keyed on batch_id are
+    unioned and hash-partitioned by it once, and both aggregations
+    below (per pair, then per batch doc) run on that partitioning.
+    The sets, tagged by ``_k``:
+
+    0. the batch ids, one row per batch row (a repeated id keeps each
+       of its rows in the output);
+    1. the candidate pairs, each with both shingle-set sizes from one
+       broadcast left join: the index signatures joined to the
+       broadcast candidates, then to the broadcast batch sizes, so no
+       index-side relation is broadcast whole or shuffled on batch
+       keys;
+    2. the shingle hits: the index shingle relation joined to the same
+       broadcast candidates FIRST (d2's candidate-first shape, so the
+       h-join never builds the full inverted-index intersection), then
+       to the broadcast batch shingles.
+
+    Grouping by (batch_id, idx_id) makes every pair distinct, so the
+    per-doc counts are plain counts.
+    A candidate pair that shares no shingle has n_common 0 and never
+    verifies (a band-hash collision counts in n_cand only)."""
     bhashed, bsigs, bbands = (
         bframes if bframes is not None else _minhash_frames(batch)
     )
     if cand is None:
         cand = probe_candidates(ibands, bbands, exclude_self)
-    # candidate-first verification order (d2's proven shape): the index
-    # shingle relation is filtered to candidate docs FIRST (broadcast
-    # semi-shape), so the h-join never materializes the full
-    # inverted-index intersection list
-    common = (
+    hits = (
         ihashed.alias("si")
         .join(F.broadcast(cand), F.col("si.id") == F.col("idx_id"))
         .join(
@@ -1329,48 +1335,66 @@ def probe_with_index(
             (F.col("sb.id") == F.col("batch_id"))
             & (F.col("sb.h") == F.col("si.h")),
         )
-        .groupBy("batch_id", "idx_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+        .select("batch_id", "idx_id")
     )
-    common_nb = common.join(
-        F.broadcast(
-            bsigs.select(F.col("id").alias("bid"), F.col("n_sh").alias("b_nsh"))
-        ),
-        F.col("bid") == F.col("batch_id"),
-    )
-    jac = F.col("n_common").cast("double") / (
-        F.col("b_nsh") + F.col("i_nsh") - F.col("n_common")
-    )
-    verified = (
-        isigs.select(F.col("id").alias("iid"), F.col("n_sh").alias("i_nsh"))
-        .join(F.broadcast(common_nb), F.col("iid") == F.col("idx_id"))
-        .where(jac >= _JACCARD_THRESHOLD)
-        .select("batch_id", "idx_id", jac.alias("jac"))
-    )
-    per_batch = (
-        cand.join(F.broadcast(verified), ["batch_id", "idx_id"], "left")
-        .groupBy("batch_id")
-        .agg(
-            F.count_distinct("idx_id").alias("n_cand"),
-            F.count_distinct(
-                F.when(F.col("jac").isNotNull(), F.col("idx_id"))
-            ).alias("n_match"),
-            F.min(F.when(F.col("jac").isNotNull(), F.col("idx_id"))).alias(
-                "match_id_min"
+    sizes = (
+        isigs.join(F.broadcast(cand), F.col("id") == F.col("idx_id"))
+        .select("batch_id", "idx_id", F.col("n_sh").alias("i_nsh"))
+        .join(
+            F.broadcast(
+                bsigs.select(F.col("id").alias("batch_id"), F.col("n_sh").alias("b_nsh"))
             ),
-            F.round(F.max("jac"), 6).alias("best_jaccard"),
+            "batch_id",
         )
     )
-    return batch.select(F.col("id").alias("batch_id")).join(
-        F.broadcast(per_batch), "batch_id", "left"
-    ).select(
+    tagged = (
+        batch.select(
+            F.col("id").alias("batch_id"),
+            F.lit(None).cast("long").alias("idx_id"),
+            F.lit(0).alias("_k"),
+        )
+        .unionByName(
+            cand.join(F.broadcast(sizes), ["batch_id", "idx_id"], "left").withColumn(
+                "_k", F.lit(1)
+            ),
+            allowMissingColumns=True,
+        )
+        .unionByName(hits.withColumn("_k", F.lit(2)), allowMissingColumns=True)
+        .repartition("batch_id")
+    )
+
+    def n_of(k: int):
+        return F.count(F.when(F.col("_k") == k, 1))
+
+    per_pair = tagged.groupBy("batch_id", "idx_id").agg(
+        n_of(0).alias("n_rows"),
+        (n_of(1) > 0).alias("is_cand"),
+        n_of(2).alias("n_common"),
+        F.max("b_nsh").alias("b_nsh"),
+        F.max("i_nsh").alias("i_nsh"),
+    )
+    jac = F.when(
+        F.col("n_common") > 0,
+        F.col("n_common").cast("double")
+        / (F.col("b_nsh") + F.col("i_nsh") - F.col("n_common")),
+    )
+    matched = F.col("is_cand") & F.coalesce(jac >= _JACCARD_THRESHOLD, F.lit(False))
+    per_batch = per_pair.groupBy("batch_id").agg(
+        F.sum("n_rows").alias("n_rows"),
+        F.count(F.when(F.col("is_cand"), 1)).alias("n_cand"),
+        F.count(F.when(matched, 1)).alias("n_match"),
+        F.min(F.when(matched, F.col("idx_id"))).alias("match_id_min"),
+        F.round(F.max(F.when(matched, jac)), 6).alias("best_jaccard"),
+    )
+    return per_batch.select(
         "batch_id",
-        F.coalesce("n_cand", F.lit(0)).alias("n_cand"),
-        F.coalesce("n_match", F.lit(0)).alias("n_match"),
+        "n_cand",
+        "n_match",
         "match_id_min",
         "best_jaccard",
-        (F.coalesce("n_match", F.lit(0)) == 0).alias("is_novel"),
-    )
+        (F.col("n_match") == 0).alias("is_novel"),
+        F.explode(F.array_repeat(F.lit(0), F.col("n_rows").cast("int"))).alias("_r"),
+    ).drop("_r")
 
 
 # ---------------------------------------------------------------------------

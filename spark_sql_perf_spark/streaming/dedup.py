@@ -122,13 +122,13 @@ def stream_documents(
 #
 # Layout. The base is partitioned by ``id_part = xxhash64(id) %
 # _N_ID_PARTS``, a bounded id-derived key (the same pattern as
-# ann_serve_at_rest's sig-derived layout). A probe or guard collects the
-# distinct parts its candidate or novel ids hash into (a driver-side list
-# of at most _N_ID_PARTS values, never O(ids)) and reads only those
-# directories. In the trickle regime, where the fixed per-batch index
-# I/O is the tax, the scan shrinks to |parts| / _N_ID_PARTS of the
-# index; at large batches the parts saturate and the scan amortizes over
-# the candidates.
+# ann_serve_at_rest's sig-derived layout). A probe or guard reads only
+# the parts its candidate or novel ids hash into: a driver-side set of
+# at most _N_ID_PARTS values (never O(ids)), observed on the job that
+# materializes those ids (_materialize_parts). In the trickle regime,
+# where the fixed per-batch index I/O is the tax, the scan shrinks to
+# |parts| / _N_ID_PARTS of the index; at large batches the parts
+# saturate and the scan amortizes over the candidates.
 #
 # Appends do not write into the partitioned base: a saturating batch
 # would publish one file per touched directory (192 files per append
@@ -260,7 +260,9 @@ def read_index_relation(
         for i in range(chunk, len(paths), chunk):
             out = out.unionByName(reader.parquet(*paths[i : i + chunk]))
         if parts is not None:
-            out = out.where(F.col(_ID_PART).isin(parts))
+            # one parsed predicate, not one py4j literal per part
+            listed = ", ".join(map(str, parts))
+            out = out.where(f"{_ID_PART} IN ({listed})" if parts else "false")
         out = out.select(*schema.fieldNames())
     delta = _delta_dir(index_dir, rel)
     if _count_data_files(fs, Path, delta) > 0:
@@ -278,17 +280,17 @@ def _index_fs(spark: SparkSession, index_dir: str):
 
 
 def _count_data_files(fs, Path, dir_path: str) -> int:
-    """Recursive data-file count (metadata files excluded) — the number
-    the probe's file-listing cost is proportional to."""
-    if not fs.exists(Path(dir_path)):
+    """Recursive data-file count (metadata files, whose names start with
+    ``_`` or ``.``, excluded) — the number the probe's file-listing cost
+    is proportional to. The file system counts every file under the
+    directory in one call, less the metadata files a glob finds where
+    the layout keeps them (the directory itself and its id_part
+    directories): a constant number of calls, not one per entry."""
+    path = Path(dir_path)
+    if not fs.exists(path):
         return 0
-    it = fs.listFiles(Path(dir_path), True)
-    n = 0
-    while it.hasNext():
-        name = it.next().getPath().getName()
-        if not (name.startswith("_") or name.startswith(".")):
-            n += 1
-    return n
+    meta = fs.globStatus(Path(f"{dir_path}/{{,*/}}{{_,.}}*"))
+    return fs.getContentSummary(path).getFileCount() - len(meta)
 
 
 def _partition_dirs(fs, Path, dir_path: str) -> dict[int, str]:
@@ -297,11 +299,20 @@ def _partition_dirs(fs, Path, dir_path: str) -> dict[int, str]:
     size is also the compacted-state file floor (compaction leaves one
     file per directory), which compact_index's rewrite threshold must
     sit above or a partitioned relation would re-trigger a full rewrite
-    on every check."""
+    on every check. One glob lists the directories and their paths
+    come back as one string: a constant number of calls, not one per
+    directory."""
+    from pyspark import SparkContext
+
     if not fs.exists(Path(dir_path)):
         return {}
+    jvm = SparkContext._jvm
+    found = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(
+        fs.globStatus(Path(f"{dir_path}/{_ID_PART}=*"))
+    )
+    listed = jvm.scala.Predef.genericWrapArray(found).mkString("\n")
+    names = (path.rsplit("/", 1)[-1] for path in listed.split("\n"))
     prefix = f"{_ID_PART}="
-    names = (status.getPath().getName() for status in fs.listStatus(Path(dir_path)))
     return {
         int(name[len(prefix):]): f"{dir_path}/{name}"
         for name in names
@@ -320,15 +331,35 @@ def index_file_counts(spark: SparkSession, index_dir: str) -> dict[str, int]:
     }
 
 
+def _materialize_observed(df: DataFrame, *metrics):
+    """``memo.materialize(df, eager=True)`` with ``metrics`` (aggregate
+    columns) observed on that same job; returns the frame and the
+    metrics as a JVM Row. The metrics are read from the executed query,
+    not through ``pyspark.sql.Observation``: its session-wide listener
+    makes later closures that capture the session unserializable (an ML
+    evaluator in the same session then fails)."""
+    observed = df.observe("observed", *metrics)
+    out = memo.materialize(observed, eager=True)
+    return out, observed._jdf.queryExecution().observedMetrics().get("observed").get()
+
+
+def _materialize_parts(df: DataFrame, col: str) -> tuple[DataFrame, list[int]]:
+    """``memo.materialize(df, eager=True)`` and the distinct id_part
+    values of its ``col``, observed on that same job: a bounded set (at
+    most _N_ID_PARTS values), and a retried task cannot change a set."""
+    out, row = _materialize_observed(df, F.collect_set(_id_part(col)))
+    return out, list(row.getList(0))
+
+
 def grow_index_append(spark: SparkSession, index_dir: str, novels: DataFrame) -> None:
     """Append accepted novels (an (id, text) frame) to the at-rest
     index's ``__delta`` sidecars (see _append_novels): the novel ids
     are materialized once and the novels' minhash frames are built
     lazily from ``novels``."""
     with job_step(spark, "grow.novels"):
-        novel_ids = memo.materialize(novels.select("id").distinct(), eager=True)
+        novel_ids, parts = _materialize_parts(novels.select("id").distinct(), "id")
     try:
-        _append_novels(spark, index_dir, novel_ids, _minhash_frames(novels))
+        _append_novels(spark, index_dir, novel_ids, parts, _minhash_frames(novels))
     finally:
         memo.release(novel_ids)
 
@@ -337,21 +368,23 @@ def _append_novels(
     spark: SparkSession,
     index_dir: str,
     novel_ids: DataFrame,
+    parts: list[int],
     frames: tuple[DataFrame, DataFrame, DataFrame],
 ) -> None:
-    """Append the rows of the materialized ``novel_ids`` (distinct ids)
-    from ``frames`` (hashed, sigs, bands: any superset of the novels,
-    e.g. the whole batch's) to the index's ``__delta`` sidecars, each
-    relation INDEPENDENTLY guarded: hashed/sigs at id granularity,
-    bands at (id, band) granularity (r12 ADVICE — an anti-join of the
-    new band rows against the LIVE band rows, so a replay REPAIRS an id
-    left with partial band coverage by a non-rename-atomic object store
-    instead of skipping it; on a rename-atomic filesystem the
-    single-file delta append makes that state unreachable, so the finer
-    guard is a repair path). Every relation's rows are restricted to
-    the novel ids, so no frame row of a non-novel id is ever appended.
+    """Append the rows of the materialized ``novel_ids`` (distinct ids,
+    whose id_part values are ``parts``) from ``frames`` (hashed, sigs,
+    bands: any superset of the novels, e.g. the whole batch's) to the
+    index's ``__delta`` sidecars, each relation INDEPENDENTLY guarded:
+    hashed/sigs at id granularity, bands at (id, band) granularity (r12
+    ADVICE — a new band row is dropped only if the LIVE bands hold that
+    (id, band), so a replay REPAIRS an id left with partial band
+    coverage by a non-rename-atomic object store instead of skipping
+    it; on a rename-atomic filesystem the single-file delta append
+    makes that state unreachable, so the finer guard is a repair path).
+    Every relation's rows are restricted to the novel ids, so no frame
+    row of a non-novel id is ever appended.
 
-    Per-relation guards (not one shared anti-join) are what make the
+    Per-relation guards (not one shared id set) are what make the
     three non-atomic appends converge under crash-and-replay: a crash
     between the hashed and sigs appends leaves hashed grown and sigs
     not — on replay the hashed guard skips (no duplicate (id, h) rows
@@ -361,48 +394,55 @@ def _append_novels(
     ONE flat file, one rename — all of an id's rows inside), and
     replay completes exactly the missing ones.
 
-    Guard cost: the novel ids' id_part values are collected (a bounded
-    driver-side list, <= _N_ID_PARTS values; an empty list means no
-    novels and returns at once). ONE guard job reads a rel-tagged union
-    of the three relations' guard columns (base pruned to those parts,
-    plus the small delta sidecars), broadcast-semi-filtered by the novel
-    ids, and materializes it; each relation's append then anti-joins
-    against that tiny frozen frame and writes one file."""
-    with job_step(spark, "grow.parts"):
-        parts = [
-            r[0]
-            for r in novel_ids.select(_id_part("id").alias("p"))
-            .distinct()
-            .collect()
-        ]
+    Guard cost: an empty ``parts`` means no novels and returns at once.
+    Otherwise ONE guard job materializes the rows to append: the
+    frames' novel rows, tagged (rel, id, band, payload columns) with
+    band null for hashed and sigs, anti-joined against one broadcast
+    union of the live (rel, id, band) rows of the novel ids (base
+    pruned to ``parts``, plus the small delta sidecars) on rel, id and
+    a null-safe band — id granularity for hashed and sigs, (id, band)
+    for bands. The live rows are thereby frozen before the first
+    append, and the job observes a row count per relation. Each
+    relation's append is then one write job over that frozen frame;
+    a relation with nothing to append (a replayed batch) writes no
+    file."""
     if not parts:
         return
+    ids = F.broadcast(novel_ids)
+    no_band = F.lit(None).cast("int").alias("band")
 
-    def guard_read(rel: str) -> DataFrame:
-        df = read_index_relation(spark, index_dir, rel, parts=parts)
-        band = F.col("band") if rel == "bands" else F.lit(None).cast("int").alias("band")
-        return df.select(F.lit(rel).alias("rel"), F.col("id"), band)
+    def tagged(rel: str, df: DataFrame, cols: list) -> DataFrame:
+        return df.join(ids, "id", "left_semi").select(F.lit(rel).alias("rel"), *cols)
 
+    new = live = None
+    for rel, frame in zip(_INDEX_RELS, frames):
+        band = [] if rel == "bands" else [no_band]
+        rows = tagged(rel, frame, [*_INDEX_RELS[rel].fieldNames(), *band])
+        guard = tagged(
+            rel,
+            read_index_relation(spark, index_dir, rel, parts=parts),
+            ["id", "band" if rel == "bands" else no_band],
+        )
+        new = rows if new is None else new.unionByName(rows, allowMissingColumns=True)
+        live = guard if live is None else live.unionByName(guard)
+    n, g = new.alias("n"), F.broadcast(live.alias("g"))
+    key = (
+        (F.col("n.rel") == F.col("g.rel"))
+        & (F.col("n.id") == F.col("g.id"))
+        & F.col("n.band").eqNullSafe(F.col("g.band"))
+    )
+    # a left join that keeps the unmatched rows, not a left anti join:
+    # the optimizer pushes an anti join below the union of the new rows
+    # and specializes the live side per relation, one broadcast each
     with job_step(spark, "grow.guard"):
-        live = memo.materialize(
-            guard_read("hashed")
-            .unionByName(guard_read("sigs"))
-            .unionByName(guard_read("bands"))
-            .join(F.broadcast(novel_ids), "id", "left_semi")
-            .distinct(),
-            eager=True,
+        to_append, counted = _materialize_observed(
+            n.join(g, key, "left").where(F.col("g.id").isNull()).select("n.*"),
+            *[F.count(F.when(F.col("rel") == rel, 1)) for rel in _INDEX_RELS],
         )
     try:
-        for rel, frame in zip(_INDEX_RELS, frames):
-            if rel == "bands":
-                live_pairs = live.where(F.col("rel") == rel).select("id", "band")
-                to_append = frame.join(F.broadcast(novel_ids), "id", "left_semi").join(
-                    F.broadcast(live_pairs), ["id", "band"], "left_anti"
-                )
-            else:
-                live_ids = live.where(F.col("rel") == rel).select("id")
-                missing = novel_ids.join(F.broadcast(live_ids), "id", "left_anti")
-                to_append = frame.join(F.broadcast(missing), "id")
+        for i, (rel, schema) in enumerate(_INDEX_RELS.items()):
+            if not counted.getLong(i):
+                continue
             # coalesce(1) into the flat delta sidecar: the batch-bounded
             # append commits as ONE file rename, so each relation's
             # novel set is fully appended or absent — never split
@@ -412,12 +452,14 @@ def _append_novels(
             # bands guard above repairs exactly that state.
             with job_step(spark, f"grow.append.{rel}"):
                 (
-                    to_append.coalesce(1)
+                    to_append.where(F.col("rel") == rel)
+                    .select(*schema.fieldNames())
+                    .coalesce(1)
                     .write.mode("append")
                     .parquet(_delta_dir(index_dir, rel))
                 )
     finally:
-        memo.release(live)
+        memo.release(to_append)
 
 
 def probe_index_at_rest(
@@ -430,10 +472,10 @@ def probe_index_at_rest(
     """Partition-pruned probe of an (id, text) batch against the
     at-rest index (r12 VERDICT task 2): candidates are materialized
     FIRST (one localCheckpoint job — the bands join against the
-    broadcast batch side), the distinct id_part values of the candidate
-    ids are collected (a bounded list, <= _N_ID_PARTS, never O(ids)),
-    and the hashed/sigs verification scans open ONLY those directories
-    (read_index_relation's ``parts``). Per-batch index I/O becomes
+    broadcast batch side), which also observes the distinct id_part
+    values of the candidate ids (a bounded set, <= _N_ID_PARTS, never
+    O(ids)), and the hashed/sigs verification scans open ONLY those
+    directories (read_index_relation's ``parts``). Per-batch index I/O becomes
     O(candidate partitions) instead of O(index) — the trickle-regime
     fix; at saturating batch sizes the filter keeps every directory and
     the plan equals the unpruned one. Every relation read is base
@@ -456,14 +498,9 @@ def probe_index_at_rest(
     if bframes is None:
         bframes = _minhash_frames(batch)
     with job_step(spark, "probe.cand"):
-        cand = memo.materialize(
-            probe_candidates(ibands, bframes[2], exclude_self), eager=True
+        cand, parts = _materialize_parts(
+            probe_candidates(ibands, bframes[2], exclude_self), "idx_id"
         )
-    with job_step(spark, "probe.parts"):
-        parts = [
-            r[0]
-            for r in cand.select(_id_part("idx_id").alias("p")).distinct().collect()
-        ]
     ihashed = read_index_relation(spark, index_dir, "hashed", parts=parts)
     isigs = read_index_relation(spark, index_dir, "sigs", parts=parts)
     out = probe_with_index(
@@ -701,9 +738,12 @@ def streaming_incremental_probe(
             # lazily) and feed the candidate join, the verification and
             # the index append; the probe's decisions are materialized
             # once too, since the merge reads them twice (touched-bucket
-            # collect + winners write). Every frame is released when the
-            # batch ends: a long-running stream must not accumulate
-            # pinned RDDs.
+            # collect + winners write). No list costs a job of its own:
+            # the candidates' and the stored novels' id_part sets are
+            # observed on the jobs that materialize them, and the guard
+            # job counts the rows to append per relation. Every frame is
+            # released when the batch ends: a long-running stream must
+            # not accumulate pinned RDDs.
             with job_step(spark, "batch.minhash"):
                 bhashed = memo.materialize(_minhash_hashed(batch), eager=False)
                 bsigs = memo.materialize(_sigs_from_hashed(bhashed), eager=True)
@@ -735,21 +775,21 @@ def streaming_incremental_probe(
             # bucket) and is pruned to the merge's touched buckets (the
             # sink's O(touched buckets) contract); with no touched list
             # the target held nothing before this merge, so it holds
-            # this batch alone. It is MATERIALIZED once: the guard and
-            # the three appends downstream re-read a tiny frozen frame.
+            # this batch alone. It is MATERIALIZED once, with its
+            # id_part set: the guard re-reads a tiny frozen frame.
             stored = spark.read.schema(
                 StructType([*out.schema, StructField(_BUCKET, LongType())])
             ).parquet(target_dir)
             if touched is not None:
                 stored = stored.where(F.col(_BUCKET).isin(touched))
             with job_step(spark, "grow.novels"):
-                stored_novel_ids = memo.materialize(
+                stored_novel_ids, parts = _materialize_parts(
                     stored.where(F.col("is_novel"))
                     .select(F.col("batch_id").alias("id"))
                     .join(F.broadcast(batch.select("id")), "id", "left_semi"),
-                    eager=True,
+                    "id",
                 )
-            _append_novels(spark, index_dir, stored_novel_ids, bframes)
+            _append_novels(spark, index_dir, stored_novel_ids, parts, bframes)
             if compact_every and (batch_id + 1) % compact_every == 0:
                 compact_index(spark, index_dir, max_files=compact_max_files)
             state["healthy"] = True

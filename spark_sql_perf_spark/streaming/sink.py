@@ -86,7 +86,10 @@ def merge_into_buckets(
     touched = None
     if _target_has_buckets(spark, target_dir):
         with job_step(spark, "merge.touched"):
-            touched = [r[0] for r in batch.select(_BUCKET).distinct().collect()]
+            # one partition: the distinct needs no exchange, so one job
+            touched = [
+                r[0] for r in batch.select(_BUCKET).coalesce(1).distinct().collect()
+            ]
         if not touched:
             return touched
         existing = (

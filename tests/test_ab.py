@@ -122,7 +122,7 @@ def test_plan_normalizer_ignores_ids_only():
     assert ab.normalize_plan(smj) != ab.normalize_plan(other)
 
 
-@pytest.mark.parametrize("sub", ["pairs", "plan", "time", "oracle", "costs", "stages"])
+@pytest.mark.parametrize("sub", ["pairs", "plan", "time", "oracle", "costs", "stages", "steps"])
 def test_subcommand_help_exits_zero(sub):
     proc = subprocess.run([sys.executable, os.path.join(TOOLS, "ab.py"), sub, "--help"],
                           capture_output=True, text=True, timeout=60)

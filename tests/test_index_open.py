@@ -164,3 +164,62 @@ def test_pruned_open_launches_no_spark_job(spark, grown_index):
             before = _job_count(spark)
             read_index_relation(spark, grown_index, rel, parts=parts)
             assert _job_count(spark) - before == 0, (rel, parts and len(parts))
+
+
+def _per_entry_counts(fs, Path, dir_path: str) -> int:
+    """The per-entry listing the helpers replaced: every file under the
+    directory, one call per entry, metadata names skipped."""
+    if not fs.exists(Path(dir_path)):
+        return 0
+    it = fs.listFiles(Path(dir_path), True)
+    n = 0
+    while it.hasNext():
+        name = it.next().getPath().getName()
+        n += not (name.startswith("_") or name.startswith("."))
+    return n
+
+
+def _per_entry_dirs(fs, Path, dir_path: str) -> dict[int, str]:
+    if not fs.exists(Path(dir_path)):
+        return {}
+    names = [s.getPath().getName() for s in fs.listStatus(Path(dir_path))]
+    return {
+        int(n[len("id_part="):]): f"{dir_path}/{n}" for n in names if n.startswith("id_part=")
+    }
+
+
+def test_listing_helpers_match_per_entry_listing(spark, sparse_indexes):
+    """_count_data_files and _partition_dirs give the per-entry listing's
+    answers on a built, grown, compacted and grown-again index (a base of
+    one file per directory plus a delta), on a sparse and a legacy base,
+    and on a missing directory."""
+    from spark_sql_perf_spark.catalog import table
+    from spark_sql_perf_spark.streaming.dedup import (
+        _count_data_files,
+        _index_fs,
+        _partition_dirs,
+        build_probe_index,
+        compact_index,
+        grow_index_append,
+    )
+
+    index_dir = os.path.join(tempfile.mkdtemp(prefix="index-list-"), "index")
+    build_probe_index(spark, SF_DIR_TINY, index_dir)
+    docs = table(spark, SF_DIR_TINY, "documents")
+    grow_index_append(spark, index_dir, _novels(docs, 17, 5_000_000))
+    assert set(compact_index(spark, index_dir, max_files=0)) == set(RELS)
+    grow_index_append(spark, index_dir, _novels(docs, 19, 6_000_000))
+
+    fs, Path = _index_fs(spark, index_dir)
+    dirs = [
+        f"{root}/{rel}{suffix}"
+        for root in (index_dir, *sparse_indexes.values())
+        for rel in RELS
+        for suffix in ("", "__delta")
+    ]
+    dirs.append(f"{index_dir}/missing")
+    for d in dirs:
+        assert _count_data_files(fs, Path, d) == _per_entry_counts(fs, Path, d), d
+        assert _partition_dirs(fs, Path, d) == _per_entry_dirs(fs, Path, d), d
+    assert len(_partition_dirs(fs, Path, f"{index_dir}/sigs")) == 64
+    assert _count_data_files(fs, Path, f"{index_dir}/sigs") == 64

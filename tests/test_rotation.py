@@ -97,3 +97,28 @@ def test_every_registered_query_reaches_the_driver():
     assert set(qs) == set(QUERIES)
     assert set(entry.oracle_sql()) == set(ORACLES)
     assert set(ORACLES) <= set(QUERIES)
+
+
+def test_correctness_files_in_a_tree_exported_inside_a_checkout(tmp_path):
+    """git lists only tracked round files at the top of a checkout; a
+    tree exported inside another checkout, whose round files that
+    checkout does not track, reads them from disk."""
+    import subprocess
+
+    def git(*argv: str) -> None:
+        subprocess.run(["git", "-C", str(tmp_path), *argv], check=True, capture_output=True)
+
+    git("init", "-q")
+    for name in ("CORRECTNESS_r01.json", "CORRECTNESS_r02.json"):
+        (tmp_path / name).write_text("{}")
+    git("add", "CORRECTNESS_r01.json")  # r02 stays untracked
+    exported = tmp_path / ".perfbench" / "ab" / "tree"
+    exported.mkdir(parents=True)
+    for name in ("CORRECTNESS_r03.json", "CORRECTNESS_r04.json"):
+        (exported / name).write_text("{}")
+
+    assert entry._correctness_files(str(tmp_path)) == [str(tmp_path / "CORRECTNESS_r01.json")]
+    assert entry._correctness_files(str(exported)) == [
+        str(exported / "CORRECTNESS_r03.json"),
+        str(exported / "CORRECTNESS_r04.json"),
+    ]

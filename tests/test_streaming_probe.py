@@ -580,6 +580,27 @@ def test_compact_index_preserves_probe_and_cuts_files(spark):
     assert read_index_relation(spark, index_dir, "sigs").count() == want_sigs
 
 
+def _all_jobs(spark):
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(spark.sparkContext._jvm.java.util.ArrayList())
+    it = jobs.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _described(jobs, seen: set) -> list[tuple]:
+    """(description, job group) of each job not in ``seen``."""
+    return [
+        (
+            j.description().get() if j.description().isDefined() else None,
+            j.jobGroup().get() if j.jobGroup().isDefined() else None,
+        )
+        for j in jobs
+        if j.jobId() not in seen
+    ]
+
+
 @pytest.fixture(scope="module")
 def mixed_drain(spark):
     """One arrival through the grow loop: near-dups of corpus docs
@@ -623,30 +644,15 @@ def mixed_drain(spark):
             for rel in ("hashed", "sigs", "bands")
         }
 
-    def all_jobs():
-        jsc = spark.sparkContext._jsc.sc()
-        jsc.listenerBus().waitUntilEmpty()
-        jobs = jsc.statusStore().jobsList(spark.sparkContext._jvm.java.util.ArrayList())
-        it = jobs.iterator()
-        while it.hasNext():
-            yield it.next()
-
     before = index_rows()
-    seen = {j.jobId() for j in all_jobs()}
+    seen = {j.jobId() for j in _all_jobs(spark)}
     q = streaming_incremental_probe(
         spark, SF_DIR_TINY, stream_dir, index_dir, target_dir,
         max_files_per_trigger=1, grow_index=True,
     )
     q.awaitTermination(180)
     assert q.exception() is None, q.exception()
-    jobs = [
-        (
-            j.description().get() if j.description().isDefined() else None,
-            j.jobGroup().get() if j.jobGroup().isDefined() else None,
-        )
-        for j in all_jobs()
-        if j.jobId() not in seen
-    ]
+    jobs = _described(_all_jobs(spark), seen)
     decided = {
         r["batch_id"]: r["is_novel"]
         for r in spark.read.parquet(target_dir).select("batch_id", "is_novel").collect()
@@ -694,3 +700,66 @@ def test_grow_loop_names_every_spark_job(mixed_drain):
         "grow.novels", "grow.guard", "grow.append.hashed", "grow.append.sigs",
         "grow.append.bands",
     } <= set(applied)
+
+
+def test_grow_loop_micro_batch_job_budget(mixed_drain):
+    """A plain micro-batch runs at most 26 Spark jobs, and no bounded
+    id_part list costs a job of its own: both ride the job that
+    materializes their source frame."""
+    applied = [d for d, group in mixed_drain["jobs"] if group == mixed_drain["run_id"]]
+    assert len(applied) <= 26, sorted(applied)
+    assert not {"probe.parts", "grow.parts"} & set(applied), sorted(applied)
+    assert applied.count("probe.decide") <= 6, sorted(applied)
+
+
+def test_grow_loop_replay_writes_no_empty_delta_file(spark):
+    """A whole-file redelivery whose novels are all indexed already runs
+    no append job and leaves no 0-row file in any delta sidecar (such a
+    file would count toward compaction's threshold)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from spark_sql_perf_spark.catalog import table
+    from spark_sql_perf_spark.streaming.dedup import (
+        build_probe_index,
+        streaming_incremental_probe,
+    )
+
+    work = tempfile.mkdtemp(prefix="probe-replay-")
+    index_dir = os.path.join(work, "index")
+    stream_dir = os.path.join(work, "arrivals")
+    target_dir = os.path.join(work, "decisions")
+    os.makedirs(stream_dir)
+    build_probe_index(spark, SF_DIR_TINY, index_dir)
+    docs = table(spark, SF_DIR_TINY, "documents")
+    novels = docs.where(F.col("doc_id") % 23 == 0).select(
+        (F.col("doc_id") + 2_000_000).alias("doc_id"),
+        F.array_join(F.reverse(F.split(F.lower("text"), r"\s+")), " ").alias("text"),
+        "lang", "source", "n_chars",
+    )
+    path = os.path.join(work, "novels.parquet")
+    novels.coalesce(1).write.parquet(path)
+    part = [f for f in os.listdir(path) if f.endswith(".parquet")][0]
+
+    def drain(name: str) -> list[str]:
+        os.symlink(os.path.join(path, part), os.path.join(stream_dir, name))
+        seen = {j.jobId() for j in _all_jobs(spark)}
+        q = streaming_incremental_probe(
+            spark, SF_DIR_TINY, stream_dir, index_dir, target_dir,
+            max_files_per_trigger=1, grow_index=True,
+        )
+        q.awaitTermination(180)
+        assert q.exception() is None, q.exception()
+        return [d for d, group in _described(_all_jobs(spark), seen) if group == str(q.runId)]
+
+    first = drain("arrival-0.parquet")
+    assert {"grow.append.hashed", "grow.append.sigs", "grow.append.bands"} <= set(first)
+    replayed = drain("arrival-1.parquet")
+    assert "grow.guard" in replayed  # the redelivery did reach the append step
+    assert not [d for d in replayed if d and d.startswith("grow.append.")], replayed
+    files = glob.glob(os.path.join(index_dir, "*__delta", "*.parquet"))
+    assert len(files) == 3, files  # one per relation, from the first drain
+    assert all(pq.read_metadata(f).num_rows > 0 for f in files), [
+        (f, pq.read_metadata(f).num_rows) for f in files
+    ]

@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """One measurement entry point: A/B pairs, plans, timings, oracle checks,
-query costs and per-stage profiles (``python tools/ab.py <sub> --help``).
+query costs, per-stage profiles and per-step dedup micro-batch jobs
+(``python tools/ab.py <sub> --help``).
 """
 
 from __future__ import annotations
@@ -324,6 +325,50 @@ def stages(a: argparse.Namespace) -> None:
     spark.stop()
 
 
+def steps(a: argparse.Namespace) -> None:
+    """One dedup_stream drain on the checkout: per micro-batch, the jobs and
+    job-busy seconds of each step (``spark.job.description``)."""
+    from perfbench.inputs import provision
+    from perfbench.session import start_session, stop_session
+    from perfbench.trace import Tracer, spark_activity, union_length
+    from perfbench.workloads import WORKLOADS
+
+    w = WORKLOADS["dedup_stream"]()
+    state = os.path.join(ROOT, ".perfbench")
+    manifest = provision(os.path.join(state, "inputs"), w.name, w.kind, w.params, a.seed)
+    spark = start_session(ROOT)
+    try:
+        show_conf(spark)
+        w.setup(spark, manifest, os.path.join(state, "work", "ab-steps"), Tracer(False, "ab"))
+        ops = w.run_pass(spark, 0, Tracer(False, "ab")).ops
+        jobs = spark_activity(spark)["jobs"]
+        store = spark.sparkContext._jsc.sc().statusStore()
+        it = store.jobsList(spark.sparkContext._jvm.java.util.ArrayList()).iterator()
+        names = {}
+        while it.hasNext():
+            j = it.next()
+            d = j.description()
+            names[j.jobId()] = d.get().splitlines()[0] if d.isDefined() else "(unnamed)"
+    finally:
+        stop_session(spark)
+    for op in ops:
+        if op.error:
+            print(f"\n{op.name}: FAILED {op.error.strip().splitlines()[-1]}")
+            continue
+        lo, hi = op.extra["start"], op.extra["start"] + op.latency_s
+        ran = [j for j in jobs if j["submissionTime"] and lo <= j["submissionTime"] <= hi]
+        by_step: dict[str, list[tuple[float, float]]] = {}
+        for j in ran:
+            span = (j["submissionTime"], j["completionTime"] or hi)
+            by_step.setdefault(names.get(j["jobId"], "(unnamed)"), []).append(span)
+        busy = union_length([s for spans in by_step.values() for s in spans])
+        kind = "compacting" if op.extra["compacted"] else "plain"
+        print(f"\nmicro-batch {op.extra['batch_id']} ({op.name}, {kind}): wall {op.latency_s:.3f}s,"
+              f" {len(ran)} jobs, job-busy {busy:.3f}s")
+        for step, spans in sorted(by_step.items(), key=lambda kv: (-len(kv[1]), kv[0])):
+            print(f"  {step:28s} {len(spans):3d} jobs  {union_length(spans):7.3f}s")
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -345,6 +390,8 @@ def main(argv: list[str] | None = None) -> int:
     sub.add_parser("costs", help="rewrite tools/query_costs.json in a driver-like session")
     p = sub.add_parser("stages", help="per-stage rows of each query's warm run")
     p.add_argument("queries", nargs="*", help="default: bench.HEADLINE")
+    p = sub.add_parser("steps", help="jobs and job-busy seconds per step of one dedup_stream drain")
+    p.add_argument("--seed", type=int, default=1)
     args = ap.parse_args(argv)
     if any("=" not in kv for kv in getattr(args, "conf", [])):
         ap.error("--conf takes k=v")
@@ -353,7 +400,7 @@ def main(argv: list[str] | None = None) -> int:
         os.environ["PYTHONPATH"] = os.pathsep.join([ROOT, os.path.join(ROOT, "tests")])
         sys.path[:0] = os.environ["PYTHONPATH"].split(os.pathsep)
     return {"pairs": pairs, "plan": plan, "time": time_queries, "oracle": oracle,
-            "costs": costs, "stages": stages}[args.cmd](args) or 0
+            "costs": costs, "stages": stages, "steps": steps}[args.cmd](args) or 0
 
 
 if __name__ == "__main__":
