@@ -1,5 +1,6 @@
 """Physical-layout strategies: bucketing for co-located joins, salting
-for skewed keys (the SURVEY.md 'Partitioning & shuffle' checklist).
+for skewed keys (the SURVEY.md 'Partitioning & shuffle' checklist), and
+`sized_parts`, the one partition-count rule of the at-rest indexes.
 
 Bucketing: writing both join sides bucketed by the join key lets
 sort-merge joins run with ZERO exchange — at 100 TB the difference
@@ -61,3 +62,18 @@ def salt_join(
         & (salted_left["_salt"] == salted_right["_salt"].cast("long")),
     )
     return out.drop("_salt")
+
+
+# The most directories an at-rest index relation is split into.
+MAX_PARTS = 1 << 14
+
+
+def sized_parts(rows: int, rows_per_part: int = 1 << 14, max_parts: int = MAX_PARTS) -> int:
+    """The smallest power of two that keeps each directory of a
+    ``rows``-row relation at or under ``rows_per_part`` rows, clamped to
+    [1, ``max_parts``] (a power of two): 1 at 1,000 rows, 64 at 1 M. A
+    power of two keeps ``hash % 2p`` a refinement of ``hash % p``, so
+    keys observed once at MAX_PARTS prune any relation exactly, however
+    it was last sized."""
+    want = max(1, -(-rows // rows_per_part))
+    return min(1 << (want - 1).bit_length(), max_parts)

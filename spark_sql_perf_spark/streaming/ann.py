@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from .. import memo
 from ..functions.lsh import LshParams, sign_lsh_sig_spark, sized_params, split_marker
+from ..plans.layout import MAX_PARTS, sized_parts
 
 # pipeline.similarity (a registry module) is imported lazily inside the
 # functions below: pipeline/__init__ imports its modules in a fixed
@@ -162,33 +163,12 @@ def ann_serve_batch(
 # The index AT REST: partitioned parquet layout + pruned serving.
 # ---------------------------------------------------------------------------
 
-# Default partition-directory count for the at-rest layout. The bucket
-# key itself is far too fine to be the partition column (2^nbits base
-# buckets plus split keys — millions of directories at production
-# nbits), so the layout partitions by sig % nparts: coarse enough for
-# healthy file sizes, fine enough that a serving batch's probe prunes
-# the scan to |distinct probed parts| / nparts of the data.
-LSH_NPARTS = 64
-
-
-def sized_nparts(n: int, nbits: int | None = None,
-                 target_rows: int = 2_000_000) -> int:
-    """Production partition-directory count: ~target_rows vectors per
-    directory (a healthy parquet-file budget at embedding widths),
-    clamped to [LSH_NPARTS, 2^14] directories. Kept a POWER OF TWO no
-    larger than 2^nbits so sig % nparts stays a function of the BASE
-    signature's low bits alone (split markers and extension planes live
-    at bit nbits and above): every one of a query's levels+1 candidate
-    keys then lands in the SAME partition and split sub-buckets
-    colocate with their base — the per-query-region-exact pruning the
-    r9 probe cells confirm. (A non-power-of-two nparts is still
-    CORRECT — index and probe share the same pmod — it just forfeits
-    that colocation.)"""
-    want = max(LSH_NPARTS, min(n // target_rows, 1 << 14))
-    p = 1 << max(0, want - 1).bit_length()  # next power of two >= want
-    if nbits is not None:
-        p = min(p, 1 << nbits)  # nbits >= 8 floor keeps this >= 256
-    return max(LSH_NPARTS, min(p, 1 << 14))
+# The layout partitions by sig % nparts (the bucket key itself would be
+# millions of directories at production nbits). nparts is
+# plans.layout.sized_parts at this many vectors per directory, capped at
+# 2^nbits so sig % nparts depends on the BASE signature's low bits alone:
+# all of a query's levels+1 candidate keys land in the SAME partition.
+_VECS_PER_PART = 2_000_000
 
 
 def write_lsh_partitioned(
@@ -209,15 +189,16 @@ def write_lsh_partitioned(
     ``_params`` sidecar parquet next to the data (storage-agnostic —
     works on any filesystem Spark writes to), and every at-rest probe
     reads them back instead of assuming module defaults. Pass ``n``
-    (corpus rows) for ``sized_params`` key-space sizing AND
-    ``sized_nparts`` directory sizing; defaults are oracle-scale.
+    (corpus rows) for ``sized_params`` key-space sizing; defaults are
+    oracle-scale. ``nparts`` defaults to sized over ``n`` (or a count).
     """
     from ..pipeline.similarity import lsh_buckets_df
 
     if params is None:
         params = sized_params(n) if n is not None else LshParams()
     if nparts is None:
-        nparts = sized_nparts(n, params.nbits) if n is not None else LSH_NPARTS
+        rows = vecs.count() if n is None else n
+        nparts = sized_parts(rows, _VECS_PER_PART, min(1 << params.nbits, MAX_PARTS))
     bucketed = lsh_buckets_df(
         vecs, params.nbits, params.split_bits, params.cap, dim, params.levels
     )

@@ -28,6 +28,7 @@ from pyspark.sql.types import (
 from .. import memo
 from ..metrics import job_step
 from ..operators.registry import query
+from ..plans.layout import MAX_PARTS, sized_parts
 from ..pipeline.dedup import (
     _N_HASHES,
     _bands_from_sigs,
@@ -120,24 +121,23 @@ def stream_documents(
 # signatures, band buckets), each an ``id_part``-partitioned base plus a
 # flat ``<rel>__delta`` sidecar.
 #
-# Layout. The base is partitioned by ``id_part = xxhash64(id) %
-# _N_ID_PARTS``, a bounded id-derived key (the same pattern as
-# ann_serve_at_rest's sig-derived layout). A probe or guard reads only
-# the parts its candidate or novel ids hash into: a driver-side set of
-# at most _N_ID_PARTS values (never O(ids)), observed on the job that
-# materializes those ids (_materialize_parts). In the trickle regime,
-# where the fixed per-batch index I/O is the tax, the scan shrinks to
-# |parts| / _N_ID_PARTS of the index; at large batches the parts
-# saturate and the scan amortizes over the candidates.
+# Layout. The base is partitioned by ``id_part = xxhash64(id) % p``,
+# ``p`` = plans.layout.sized_parts over the indexed ids, chosen whenever
+# a base is written (build, compaction) and recorded in it as an empty
+# ``_id_parts_<p>`` file that moves with it through compaction's swap.
+# A probe or guard observes its ids' keys at MAX_PARTS once, on the job
+# that materializes them (_materialize_parts); each relation's open
+# reduces them mod its own count, exact as every count is a power of
+# two dividing MAX_PARTS. A base without the record is read in full.
+# Small batches scan |parts| / p of the index; large ones saturate it.
 #
-# Appends do not write into the partitioned base: a saturating batch
-# would publish one file per touched directory (192 files per append
-# against the flat sidecar's 3). Each relation's accepted novels land as
-# ONE flat file per micro-batch in the delta sidecar, so an append
-# commits as a single rename with all of an id's rows (every band) in
-# that file: fully appended or absent, the guard premise. compact_index
-# folds the delta into the base on the threshold cadence through a
-# crash-safe two-directory swap (recover_index).
+# Appends do not write into the partitioned base (a saturating batch
+# would publish a file per touched directory): each relation's accepted
+# novels land as ONE flat file per micro-batch in the delta sidecar, so
+# an append commits as a single rename with all of an id's rows (every
+# band) in that file: fully appended or absent, the guard premise.
+# compact_index folds the delta into the base on the threshold cadence
+# through a crash-safe two-directory swap (recover_index).
 #
 # Open rule (read_index_relation). A relation is opened with its
 # declared schema (_INDEX_RELS) and a file index over only the
@@ -149,8 +149,8 @@ def stream_documents(
 # so the base is opened in chunks of at most that many directories,
 # unioned: a full or pruned open, and the flat delta, launch no Spark
 # job.
-_N_ID_PARTS = 64
 _ID_PART = "id_part"
+_PARTS_RECORD = "_id_parts_"
 
 
 def _long(name: str) -> StructField:
@@ -177,12 +177,30 @@ def _delta_dir(index_dir: str, rel: str) -> str:
     return f"{index_dir}/{rel}__delta"
 
 
-def _id_part(col: str):
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(_N_ID_PARTS))
+def _id_part(col: str, nparts: int):
+    return F.pmod(F.xxhash64(F.col(col)), F.lit(nparts))
 
 
-def _with_id_part(df: DataFrame) -> DataFrame:
-    return df.withColumn(_ID_PART, _id_part("id"))
+def _write_base(fs, Path, df: DataFrame, base: str, nparts: int) -> None:
+    """Write ``df`` as a base of ``nparts`` id_part directories, one file
+    each (hash-distributed by the partition key, so each id_part's rows
+    land in one task), then record the count inside it."""
+    assert nparts & (nparts - 1) == 0 and nparts <= MAX_PARTS, nparts
+    (
+        df.withColumn(_ID_PART, _id_part("id", nparts))
+        .repartition(nparts, F.col(_ID_PART))
+        .write.mode("overwrite")
+        .partitionBy(_ID_PART)
+        .parquet(base)
+    )
+    fs.create(Path(f"{base}/{_PARTS_RECORD}{nparts}"), True).close()
+
+
+def _recorded_parts(fs, Path, base: str) -> int | None:
+    """The id_part count recorded in a base (one glob); None for a base
+    without a record, which is read in full."""
+    found = fs.globStatus(Path(f"{base}/{_PARTS_RECORD}*")) or []
+    return int(found[0].getPath().getName()[len(_PARTS_RECORD):]) if len(found) == 1 else None
 
 
 def build_probe_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
@@ -193,33 +211,27 @@ def build_probe_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     the batch query can only document: index cost amortizes over the
     stream's lifetime, per-batch cost is the broadcast probe alone.
 
-    Layout: every relation partitioned by the bounded id-derived
-    ``id_part`` (see the module note) — one file per directory here;
-    a production-sized index would let compact_index's byte-targeted
-    rewrite pick the within-directory file count."""
+    Layout: see the module note; the part count is sized from the
+    corpus's document count (a footer count, not the minhash frames')."""
     from ..catalog import table
 
     idx = table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id"), F.lower("text").alias("text")
     )
-    write_index_frames(index_dir, *_minhash_frames(idx))
+    write_index_frames(index_dir, *_minhash_frames(idx), nparts=sized_parts(idx.count()))
 
 
-def write_index_frames(
-    index_dir: str, hashed: DataFrame, sigs: DataFrame, bands: DataFrame
-) -> None:
+def write_index_frames(index_dir: str, *frames: DataFrame, nparts=None) -> None:
     """Lay (hashed, sigs, bands) frames out in the at-rest index layout
-    (id_part-partitioned, one file per directory) — shared by
-    build_probe_index and every tool/test that stages an index from its
-    own corpus, so a layout change happens in exactly one place."""
-    for rel, frame in zip(_INDEX_RELS, (hashed, sigs, bands)):
-        (
-            _with_id_part(frame)
-            .repartition(_N_ID_PARTS, F.col(_ID_PART))
-            .write.mode("overwrite")
-            .partitionBy(_ID_PART)
-            .parquet(f"{index_dir}/{rel}")
-        )
+    (module note) — shared by build_probe_index and every tool/test that
+    stages an index from its own corpus, so a layout change happens in
+    exactly one place. ``nparts`` (a power of two up to MAX_PARTS)
+    defaults to sized_parts over the sigs rows, one per id."""
+    sigs = frames[1]
+    nparts = nparts or sized_parts(sigs.count())
+    fs, Path = _index_fs(sigs.sparkSession, index_dir)
+    for rel, frame in zip(_INDEX_RELS, frames):
+        _write_base(fs, Path, frame, f"{index_dir}/{rel}", nparts)
 
 
 def read_index_relation(
@@ -232,19 +244,22 @@ def read_index_relation(
     base unioned with the flat ``__delta`` sidecar of not-yet-compacted
     appends, both read with the relation's declared schema.
 
-    ``parts`` (a list of id_part values) restricts the base to those
-    parts: only their existing directories are opened (``basePath``
-    keeps id_part a partition column) and ``id_part IN parts`` still
-    filters the scan, so the plan carries it as a partition filter. The
-    opened directories are split into chunks the driver lists itself
-    (module note), so no open launches a Spark job. The delta is
-    bounded by the compaction cadence and is always read in full. A
-    legacy base written without partitionBy has no id_part column and
-    is read in full whatever ``parts`` says; decisions are identical
-    either way."""
+    ``parts`` (id keys at MAX_PARTS) restricts the base to the parts
+    they reduce to under its recorded count: only their existing
+    directories are opened (``basePath`` keeps id_part a partition
+    column) and ``id_part IN`` them still filters the scan, so the plan
+    carries it as a partition filter. The opened directories are split
+    into chunks the driver lists itself (module note), so no open
+    launches a Spark job. The delta is bounded by the compaction cadence
+    and is always read in full. A base without a recorded count (or
+    without partitionBy) is read in full whatever ``parts`` says;
+    decisions are identical either way."""
     schema = _INDEX_RELS[rel]
     base = f"{index_dir}/{rel}"
     fs, Path = _index_fs(spark, index_dir)
+    if parts is not None:
+        nparts = _recorded_parts(fs, Path, base)
+        parts = None if nparts is None else sorted({p % nparts for p in parts})
     dirs = _partition_dirs(fs, Path, base)
     if not dirs:
         out = spark.read.schema(schema).parquet(base)
@@ -295,13 +310,9 @@ def _count_data_files(fs, Path, dir_path: str) -> int:
 
 def _partition_dirs(fs, Path, dir_path: str) -> dict[int, str]:
     """id_part value -> path of each top-level ``id_part=N`` directory of
-    a relation base; empty for a missing or un-partitioned base. Its
-    size is also the compacted-state file floor (compaction leaves one
-    file per directory), which compact_index's rewrite threshold must
-    sit above or a partitioned relation would re-trigger a full rewrite
-    on every check. One glob lists the directories and their paths
-    come back as one string: a constant number of calls, not one per
-    directory."""
+    a relation base; empty for a missing or un-partitioned base. One
+    glob lists the directories and their paths come back as one string:
+    a constant number of calls, not one per directory."""
     from pyspark import SparkContext
 
     if not fs.exists(Path(dir_path)):
@@ -318,6 +329,19 @@ def _partition_dirs(fs, Path, dir_path: str) -> dict[int, str]:
         for name in names
         if name.startswith(prefix)
     }
+
+
+def _indexed_ids(spark: SparkSession, fs, Path, index_dir: str) -> int:
+    """Ids in the index: its live sigs rows (one per id), summed from
+    the footers of the base and delta parquet files on the driver."""
+    read_footer = spark._jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter
+    conf = spark._jsc.hadoopConfiguration()
+    return sum(
+        block.getRowCount()
+        for d in (f"{index_dir}/sigs", _delta_dir(index_dir, "sigs"))
+        for st in fs.globStatus(Path(f"{d}/{{,*/}}[!_.]*.parquet")) or []
+        for block in read_footer(conf, st).getBlocks()
+    )
 
 
 def index_file_counts(spark: SparkSession, index_dir: str) -> dict[str, int]:
@@ -344,10 +368,10 @@ def _materialize_observed(df: DataFrame, *metrics):
 
 
 def _materialize_parts(df: DataFrame, col: str) -> tuple[DataFrame, list[int]]:
-    """``memo.materialize(df, eager=True)`` and the distinct id_part
-    values of its ``col``, observed on that same job: a bounded set (at
-    most _N_ID_PARTS values), and a retried task cannot change a set."""
-    out, row = _materialize_observed(df, F.collect_set(_id_part(col)))
+    """``memo.materialize(df, eager=True)`` and the distinct MAX_PARTS
+    keys of its ``col``, observed on that same job: a bounded set, and a
+    retried task cannot change a set."""
+    out, row = _materialize_observed(df, F.collect_set(_id_part(col, MAX_PARTS)))
     return out, list(row.getList(0))
 
 
@@ -470,17 +494,13 @@ def probe_index_at_rest(
     bframes: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Partition-pruned probe of an (id, text) batch against the
-    at-rest index (r12 VERDICT task 2): candidates are materialized
-    FIRST (one localCheckpoint job — the bands join against the
-    broadcast batch side), which also observes the distinct id_part
-    values of the candidate ids (a bounded set, <= _N_ID_PARTS, never
-    O(ids)), and the hashed/sigs verification scans open ONLY those
-    directories (read_index_relation's ``parts``). Per-batch index I/O becomes
-    O(candidate partitions) instead of O(index) — the trickle-regime
-    fix; at saturating batch sizes the filter keeps every directory and
-    the plan equals the unpruned one. Every relation read is base
-    UNION its small delta sidecar (read_index_relation), so decisions
-    always include not-yet-compacted appends.
+    at-rest index: candidates are materialized FIRST (one
+    localCheckpoint job — the bands join against the broadcast batch
+    side), which also observes the candidate ids' keys, and the
+    hashed/sigs verification scans open ONLY the directories those
+    keys reduce to (read_index_relation's ``parts``): per-batch index
+    I/O is O(candidate partitions), not O(index). Every relation read
+    includes its delta sidecar, so decisions see uncompacted appends.
 
     ``bframes`` is the batch's (hashed, sigs, bands), as for
     probe_with_index: the grow loop passes frames it materialized once
@@ -491,9 +511,8 @@ def probe_index_at_rest(
     caller must release it when the batch ends (the grow loop's
     finally block), or a long-running stream accumulates pinned blocks.
 
-    Layouts without the id_part column (a legacy index) skip pruning
-    and keep the full column-pruned scan — decisions are identical
-    either way, asserted in test_streaming_probe.py."""
+    A base without a recorded count is scanned in full; decisions are
+    identical either way (test_streaming_probe.py)."""
     ibands = read_index_relation(spark, index_dir, "bands")
     if bframes is None:
         bframes = _minhash_frames(batch)
@@ -527,11 +546,10 @@ def recover_index(spark: SparkSession, index_dir: str) -> None:
       never restored (restoring it would duplicate (id, h) rows and
       inflate n_common/jaccard).
 
-    Runs at the TOP of every grow-loop micro-batch (skipped between
-    cleanly-committed batches via the loop's healthy flag), not just
-    inside compact_index: the loop's first action is reading the live
-    relations, so a crash mid-swap would otherwise fail every replay
-    before compaction's own recovery could ever execute."""
+    A base carries its recorded id_part count inside it, so a restored
+    base keeps its own count. Also runs at the top of a grow-loop
+    micro-batch after an unclean one: the loop's first action reads the
+    live relations, which a half-done swap would fail."""
     fs, Path = _index_fs(spark, index_dir)
     for rel in _INDEX_RELS:
         live, old, tmp = (
@@ -566,33 +584,28 @@ def compact_index(
     spark: SparkSession, index_dir: str, max_files: int = 64
 ) -> dict[str, int]:
     """Fold each relation's flat ``__delta`` sidecar into its
-    id_part-partitioned base when the accreted file count warrants it —
-    the small-files answer for the grow-index loop: appends publish one
-    delta file per relation per micro-batch, and after enough batches
-    the probe's delta scan is file-listing-bound (the same tax
-    SCALE_PROBE measured for sim8). Trigger: delta files plus the
-    base's EXCESS over its one-file-per-directory floor exceeds
-    ``max_files`` (a freshly-compacted relation sits exactly at the
-    floor, so the threshold never re-triggers an idle rewrite).
+    id_part-partitioned base when the accreted file count warrants it:
+    appends publish one delta file per relation per micro-batch, and
+    after enough batches the delta scan is file-listing-bound. Trigger:
+    delta files plus the base's EXCESS over its one-file-per-directory
+    floor exceeds ``max_files`` (a freshly-compacted relation sits at
+    the floor, so the threshold never re-triggers an idle rewrite).
     Returns {relation: file_count_before} for the relations rewritten.
 
-    Target file count is sized from the relation's byte size (~128 MB
-    per file, Spark's default maxPartitionBytes, so a compacted file is
-    one scan split), floored at one file per id_part directory.
+    A rewritten base is re-sized to sized_parts over the index's ids
+    (footer-counted sigs rows, no Spark job), its count recorded inside
+    the tmp before the swap, so a count always moves with its base.
 
-    Crash discipline — rename order is the recovery contract
-    (recover_index's docstring walks every crash point): (1) write
-    base UNION delta to ``<rel>__compact_tmp``; (2) delta ->
-    ``<delta>__old``; (3) base -> ``<rel>__old``; (4) tmp -> base;
-    (5) delete both olds. The staged-aside delta is deleted only after
-    the publish — never restored once the fold is visible, or the
-    folded rows would double. Every call first RECOVERS from a prior
-    crash, so the single-writer loop self-heals on its next batch.
-    Compaction must run from that single writer loop — between
-    micro-batches, never concurrently with a probe or an append."""
+    Crash discipline — rename order is the recovery contract that
+    recover_index walks: (1) write base UNION delta to
+    ``<rel>__compact_tmp``; (2) delta -> ``<delta>__old``; (3) base ->
+    ``<rel>__old``; (4) tmp -> base; (5) delete both olds. Every call
+    first recovers, so the single writer loop (the only caller, between
+    micro-batches) self-heals on its next batch."""
     recover_index(spark, index_dir)
     fs, Path = _index_fs(spark, index_dir)
     compacted: dict[str, int] = {}
+    nparts = None
     for rel in _INDEX_RELS:
         live, old, tmp = (
             f"{index_dir}/{rel}",
@@ -606,23 +619,10 @@ def compact_index(
         base_excess = max(0, n_base - len(_partition_dirs(fs, Path, live)))
         if n_delta + base_excess <= max_files:
             continue
-        nbytes = fs.getContentSummary(Path(live)).getLength()
-        if fs.exists(Path(delta)):
-            nbytes += fs.getContentSummary(Path(delta)).getLength()
-        n_target = max(1, int(nbytes // (128 * 1024 * 1024)) + 1)
-        df = read_index_relation(spark, index_dir, rel)
-        # hash-distribute by the partition key so each id_part's rows
-        # coalesce into one task -> one file per directory (a
-        # production-sized index raises _N_ID_PARTS rather than files
-        # per directory — the directory is the pruning unit)
+        if nparts is None:
+            nparts = sized_parts(_indexed_ids(spark, fs, Path, index_dir))
         with job_step(spark, "compact.rewrite"):
-            (
-                _with_id_part(df)
-                .repartition(max(n_target, 16), F.col(_ID_PART))
-                .write.mode("overwrite")
-                .partitionBy(_ID_PART)
-                .parquet(tmp)
-            )
+            _write_base(fs, Path, read_index_relation(spark, index_dir, rel), tmp, nparts)
         if fs.exists(Path(delta)):
             if not fs.rename(Path(delta), Path(delta_old)):
                 raise IOError(f"compact_index: could not stage {delta} aside")

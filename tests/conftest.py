@@ -14,6 +14,22 @@ SF_DIR_TINY = "/root/testdata/sf0.001"
 SF_DIR_SMALL = "/root/testdata/sf0.01"
 
 
+def build_index_at(spark, index_dir: str, nparts: int) -> None:
+    """build_probe_index's at-rest index of the tiny corpus, at an
+    explicit id_part count: the size-derived count of the tiny corpus
+    is one directory, which leaves a pruning test nothing to prune."""
+    from pyspark.sql import functions as F
+
+    from spark_sql_perf_spark.catalog import table
+    from spark_sql_perf_spark.pipeline.dedup import _minhash_frames
+    from spark_sql_perf_spark.streaming.dedup import write_index_frames
+
+    idx = table(spark, SF_DIR_TINY, "documents").select(
+        F.col("doc_id").alias("id"), F.lower("text").alias("text")
+    )
+    write_index_frames(index_dir, *_minhash_frames(idx), nparts=nparts)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from spark_sql_perf_spark.session import build_session

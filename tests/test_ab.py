@@ -94,6 +94,24 @@ def test_ties_count_for_neither_and_failed_ops_sum_per_side():
     assert lines[-1] == "failed ops: base 3, change 3"
 
 
+def test_small_heap_gain_prints_a_swapped_side_caveat():
+    spec = {"end_to_end": [{"name": "heap_retained_mb", "better": "lower", "bound": 0.1}]}
+
+    def caveats(base_mb: float, change_mb: float) -> list[str]:
+        runs = {
+            "base": [_run(heap_retained_mb=base_mb + 0.001 * i) for i in range(10)],
+            "change": [_run(heap_retained_mb=change_mb + 0.001 * i) for i in range(10)],
+        }
+        lines = ab.report(spec, runs)
+        row = next(ln for ln in lines if ln.startswith("heap_retained_mb"))
+        assert row.endswith("better"), row  # the verdict itself is unchanged
+        return [ln for ln in lines if "caveat" in ln]
+
+    (line,) = caveats(82.0, 81.6)  # -0.5%: rerun with the sides swapped
+    assert "swapped" in line
+    assert caveats(82.0, 80.0) == []  # -2.4%: no caveat
+
+
 def test_base_runs_first_on_odd_seeds():
     assert [ab.pair_order(s) for s in (1, 2, 3, 4)] == [
         ("base", "change"), ("change", "base"), ("base", "change"), ("change", "base"),

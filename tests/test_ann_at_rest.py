@@ -49,8 +49,10 @@ def test_at_rest_matches_in_memory_and_prunes(spark, tmp_path):
     corpus = _corpus(spark, SF_DIR_SMALL)
     dim = embedding_dim(corpus)
     # oracle-scale params (default): the sf0.01 corpus DOES split at
-    # cap=5, so the multi-key probe exercises every depth
-    written = write_lsh_partitioned(corpus, path, dim)
+    # cap=5, so the multi-key probe exercises every depth. An explicit
+    # 64 directories: the size-derived count of this corpus is one,
+    # which leaves nothing to prune
+    written = write_lsh_partitioned(corpus, path, dim, nparts=64)
     queries = corpus.where(F.col("vec_id") < 5)
 
     got = ann_serve_at_rest(spark, queries, path, k=3)
@@ -186,18 +188,33 @@ def test_streaming_server_reads_at_rest_index(spark, tmp_path):
     shutil.rmtree(stream_dir, ignore_errors=True)
 
 
-def test_sized_nparts_rule():
-    """Power-of-two, >= LSH_NPARTS, <= min(2^nbits, 2^14), ~target_rows
-    rows per directory — the documented production directory sizing."""
-    from spark_sql_perf_spark.streaming.ann import LSH_NPARTS, sized_nparts
+def test_ann_directory_count_is_the_shared_rule(spark, tmp_path):
+    """The at-rest ANN layout sizes its directories with the shared
+    plans.layout rule: ~2 M vectors per directory, a power of two, at
+    most min(2^nbits, 2^14). A tiny corpus gets one directory, not a
+    fixed floor of 64."""
+    from spark_sql_perf_spark.functions.lsh import LshParams
+    from spark_sql_perf_spark.pipeline.similarity import embedding_dim
+    from spark_sql_perf_spark.plans.layout import MAX_PARTS, sized_parts
+    from spark_sql_perf_spark.streaming.ann import (
+        _VECS_PER_PART,
+        read_lsh_params,
+        write_lsh_partitioned,
+    )
 
-    assert sized_nparts(500) == LSH_NPARTS            # tiny corpus: floor
-    assert sized_nparts(1_000_000_000) == 512          # 1e9/2e6=500 -> 512
-    assert sized_nparts(1_000_000_000, nbits=8) == 256  # capped at 2^nbits
-    assert sized_nparts(10**12) == 1 << 14             # hard directory cap
-    for n in (1, 10**6, 10**8, 10**10):
-        p = sized_nparts(n)
-        assert p & (p - 1) == 0 and p >= LSH_NPARTS
+    assert _VECS_PER_PART == 2_000_000
+    assert sized_parts(10**9, _VECS_PER_PART) == 512  # 1e9/2e6=500 -> 512
+    assert sized_parts(10**9, _VECS_PER_PART, 1 << 8) == 256  # capped at 2^nbits
+    assert sized_parts(10**12, _VECS_PER_PART) == MAX_PARTS  # hard directory cap
+
+    path = str(tmp_path / "lsh_tiny")
+    corpus = _corpus(spark, SF_DIR_TINY)
+    n = corpus.count()
+    write_lsh_partitioned(corpus, path, embedding_dim(corpus))
+    _, nparts, _ = read_lsh_params(spark, path)
+    assert nparts == sized_parts(n, _VECS_PER_PART, 1 << LshParams().nbits) == 1
+    dirs = [d for d in os.listdir(path) if d.startswith("sig_part=")]
+    assert dirs == ["sig_part=0"], dirs
 
 
 def test_streaming_restart_never_replays_and_reuses_index(spark, tmp_path):

@@ -5,7 +5,9 @@ the directories being read. These tests pin what that must not change:
 the declared schemas equal what the writers actually write, a pruned
 open returns exactly the rows of the unpruned base filtered to the
 requested parts (plus the whole delta), a legacy un-partitioned base
-still reads in full, and no open launches a Spark job."""
+still reads in full, and no open launches a Spark job. The indexes are
+built at an explicit 64 parts, so that pruning has directories to skip
+(the size-derived count of the tiny corpus is one)."""
 
 from __future__ import annotations
 
@@ -15,7 +17,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR_TINY
+from tests.conftest import SF_DIR_TINY, build_index_at
 
 RELS = ("hashed", "sigs", "bands")
 
@@ -29,13 +31,13 @@ def _novels(docs, mod: int, offset: int):
 
 @pytest.fixture(scope="module")
 def grown_index(spark):
-    """build_probe_index over the tiny corpus (every id_part directory
+    """The tiny corpus's index at 64 parts (every id_part directory
     present) plus one grow_index_append, so every relation has a delta."""
     from spark_sql_perf_spark.catalog import table
-    from spark_sql_perf_spark.streaming.dedup import build_probe_index, grow_index_append
+    from spark_sql_perf_spark.streaming.dedup import grow_index_append
 
     index_dir = os.path.join(tempfile.mkdtemp(prefix="index-open-"), "index")
-    build_probe_index(spark, SF_DIR_TINY, index_dir)
+    build_index_at(spark, index_dir, 64)
     docs = table(spark, SF_DIR_TINY, "documents")
     grow_index_append(spark, index_dir, _novels(docs, 13, 4_000_000))
     return index_dir
@@ -44,8 +46,8 @@ def grown_index(spark):
 @pytest.fixture(scope="module")
 def sparse_indexes(spark):
     """Two indexes over five corpus docs with the same delta from one
-    grow_index_append: ``partitioned`` (write_index_frames, so most
-    id_part directories are missing) and ``legacy`` (the same frames
+    grow_index_append: ``partitioned`` (write_index_frames at 64 parts,
+    so most id_part directories are missing) and ``legacy`` (the same frames
     written without partitionBy, so the base has no id_part column)."""
     import shutil
 
@@ -60,7 +62,7 @@ def sparse_indexes(spark):
     )
     frames = _minhash_frames(corpus)
     partitioned, legacy = (os.path.join(work, kind) for kind in ("partitioned", "legacy"))
-    write_index_frames(partitioned, *frames)
+    write_index_frames(partitioned, *frames, nparts=64)
     grow_index_append(spark, partitioned, _novels(docs, 97, 7_000_000))
     for rel, frame in zip(RELS, frames):
         frame.write.parquet(f"{legacy}/{rel}")
@@ -93,17 +95,24 @@ def test_declared_schemas_match_written_relations(spark, grown_index):
 
 
 def _filtered_reference(spark, index_dir: str, rel: str, parts):
-    """The unpruned base (inferred schema) filtered to ``parts``, plus
-    the whole delta: what a pruned open must return."""
+    """The unpruned base (inferred schema) filtered to the id_part
+    values ``parts`` (keys at MAX_PARTS) reduce to under the base's
+    recorded count, plus the whole delta: what a pruned open must
+    return. A base without a record is not filtered."""
     from spark_sql_perf_spark.streaming.dedup import _ID_PART
 
     base = spark.read.parquet(f"{index_dir}/{rel}")
-    if _ID_PART in base.columns:
-        base = base.where(F.col(_ID_PART).isin(parts)).drop(_ID_PART)
+    recorded = [f for f in os.listdir(f"{index_dir}/{rel}") if f.startswith("_id_parts_")]
+    if recorded:
+        nparts = int(recorded[0][len("_id_parts_"):])
+        base = base.where(F.col(_ID_PART).isin([p % nparts for p in parts]))
+    base = base.drop(_ID_PART)
     return _rows(base) + _rows(spark.read.parquet(f"{index_dir}/{rel}__delta"))
 
 
 def test_pruned_open_equals_filtered_full_read(spark, grown_index, sparse_indexes):
+    import shutil
+
     from spark_sql_perf_spark.streaming.dedup import (
         _INDEX_RELS,
         _ID_PART,
@@ -111,6 +120,13 @@ def test_pruned_open_equals_filtered_full_read(spark, grown_index, sparse_indexe
     )
 
     sparse = sparse_indexes["partitioned"]
+    # the same sparse index with the recorded counts removed: read unpruned
+    unrecorded = os.path.join(tempfile.mkdtemp(prefix="index-open-unrecorded-"), "index")
+    shutil.copytree(sparse, unrecorded)
+    for rel in _INDEX_RELS:
+        (record,) = [f for f in os.listdir(f"{unrecorded}/{rel}") if f.startswith("_id_parts_")]
+        assert record == "_id_parts_64"
+        os.remove(f"{unrecorded}/{rel}/{record}")
     present = sorted(
         r[0]
         for r in spark.read.parquet(f"{sparse}/sigs").select(_ID_PART).distinct().collect()
@@ -123,6 +139,8 @@ def test_pruned_open_equals_filtered_full_read(spark, grown_index, sparse_indexe
         (sparse, present[:1] + missing[:2]),  # some parts have none
         (sparse, missing[:3]),  # no requested part has a directory
         (sparse, []),
+        (grown_index, [64 + 7, 3 * 64 + 21, 16383]),  # keys above the count reduce
+        (unrecorded, present[:1] + missing[:2]),  # no record: the whole base
     ]
     for index_dir, parts in cases:
         for rel in _INDEX_RELS:
@@ -192,25 +210,34 @@ def test_listing_helpers_match_per_entry_listing(spark, sparse_indexes):
     """_count_data_files and _partition_dirs give the per-entry listing's
     answers on a built, grown, compacted and grown-again index (a base of
     one file per directory plus a delta), on a sparse and a legacy base,
-    and on a missing directory."""
+    and on a missing directory. The index is built at 64 parts and the
+    compaction re-sizes it to the count the sizing rule gives its ids,
+    recorded in the base (the ids counted from parquet footers)."""
     from spark_sql_perf_spark.catalog import table
+    from spark_sql_perf_spark.plans.layout import sized_parts
     from spark_sql_perf_spark.streaming.dedup import (
         _count_data_files,
         _index_fs,
+        _indexed_ids,
         _partition_dirs,
-        build_probe_index,
+        _recorded_parts,
         compact_index,
         grow_index_append,
     )
 
     index_dir = os.path.join(tempfile.mkdtemp(prefix="index-list-"), "index")
-    build_probe_index(spark, SF_DIR_TINY, index_dir)
+    build_index_at(spark, index_dir, 64)
     docs = table(spark, SF_DIR_TINY, "documents")
     grow_index_append(spark, index_dir, _novels(docs, 17, 5_000_000))
+    fs, Path = _index_fs(spark, index_dir)
+    assert len(_partition_dirs(fs, Path, f"{index_dir}/sigs")) == 64
+    n_ids = spark.read.parquet(f"{index_dir}/sigs").count() + spark.read.parquet(
+        f"{index_dir}/sigs__delta"
+    ).count()
+    assert _indexed_ids(spark, fs, Path, index_dir) == n_ids  # footer count
     assert set(compact_index(spark, index_dir, max_files=0)) == set(RELS)
     grow_index_append(spark, index_dir, _novels(docs, 19, 6_000_000))
 
-    fs, Path = _index_fs(spark, index_dir)
     dirs = [
         f"{root}/{rel}{suffix}"
         for root in (index_dir, *sparse_indexes.values())
@@ -221,5 +248,8 @@ def test_listing_helpers_match_per_entry_listing(spark, sparse_indexes):
     for d in dirs:
         assert _count_data_files(fs, Path, d) == _per_entry_counts(fs, Path, d), d
         assert _partition_dirs(fs, Path, d) == _per_entry_dirs(fs, Path, d), d
-    assert len(_partition_dirs(fs, Path, f"{index_dir}/sigs")) == 64
-    assert _count_data_files(fs, Path, f"{index_dir}/sigs") == 64
+    nparts = sized_parts(n_ids)
+    for rel in RELS:
+        assert _recorded_parts(fs, Path, f"{index_dir}/{rel}") == nparts, rel
+        assert len(_partition_dirs(fs, Path, f"{index_dir}/{rel}")) == nparts, rel
+        assert _count_data_files(fs, Path, f"{index_dir}/{rel}") == nparts, rel

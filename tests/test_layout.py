@@ -1,5 +1,5 @@
-"""Bucketing (shuffle-free joins), salting (skew spreading) and scan
-fan-out tests."""
+"""Bucketing (shuffle-free joins), salting (skew spreading), scan
+fan-out and at-rest partition sizing tests."""
 
 from __future__ import annotations
 
@@ -223,3 +223,22 @@ def test_fan_out_does_not_swallow_planning_errors(spark):
     stream = spark.readStream.format("rate").load()
     with pytest.raises(AnalysisException):
         fan_out(stream, key="value")
+
+
+def test_sized_parts_rule():
+    """The at-rest index layout rule: a power of two, monotone in rows,
+    one directory for a 1,000-document index and at least 64 for a
+    1 M-document one, never above MAX_PARTS."""
+    from spark_sql_perf_spark.plans.layout import MAX_PARTS, sized_parts
+
+    assert sized_parts(1_000) == 1
+    assert sized_parts(1_000_000) >= 64
+    assert sized_parts(0) == 1
+    assert sized_parts(10**12) == MAX_PARTS
+    prev = 1
+    for rows in [0, 1, 1_000, *(10**k + d for k in range(4, 11) for d in (-1, 0, 1))]:
+        p = sized_parts(rows)
+        assert p & (p - 1) == 0 and 1 <= p <= MAX_PARTS, (rows, p)
+        assert p >= prev, (rows, p, prev)
+        assert p == MAX_PARTS or rows <= p * (1 << 14), (rows, p)
+        prev = p

@@ -12,7 +12,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR_TINY
+from tests.conftest import SF_DIR_TINY, build_index_at
 
 
 def test_streaming_probe_matches_batch_and_survives_replay(spark):
@@ -415,20 +415,21 @@ def test_probe_at_rest_prunes_index_partitions(spark):
     """r12 VERDICT task 2: the at-rest probe must partition-prune the
     hashed/sigs verification scans to the candidate ids' id_part
     directories — identical decisions to the unpruned probe, with a
-    file-level receipt that only the candidate partitions were read."""
+    file-level receipt that only the candidate partitions were read.
+    The index is built at an explicit 64 parts: the size-derived count
+    of the tiny corpus is one directory, which leaves nothing to prune."""
     from spark_sql_perf_spark.catalog import table
     from spark_sql_perf_spark.pipeline.dedup import probe_with_index
     from spark_sql_perf_spark.streaming.dedup import (
         _ID_PART,
         _id_part,
-        build_probe_index,
         index_file_counts,
         probe_index_at_rest,
     )
 
     work = tempfile.mkdtemp(prefix="probe-prune-")
     index_dir = os.path.join(work, "index")
-    build_probe_index(spark, SF_DIR_TINY, index_dir)
+    build_index_at(spark, index_dir, 64)
 
     # a trickle batch: few docs -> few candidate ids -> few id_parts
     docs = table(spark, SF_DIR_TINY, "documents")
@@ -457,7 +458,7 @@ def test_probe_at_rest_prunes_index_partitions(spark):
     # receipt: the pruned scans read only the candidate partitions
     parts = [
         r[0]
-        for r in cand.select(_id_part("idx_id").alias("p")).distinct().collect()
+        for r in cand.select(_id_part("idx_id", 64).alias("p")).distinct().collect()
     ]
     assert 0 < len(parts) < 64
     totals = index_file_counts(spark, index_dir)
@@ -478,18 +479,20 @@ def test_probe_at_rest_prunes_index_partitions(spark):
     assert plan.count("PartitionFilters: [id_part") >= 2, plan
 
 
-def test_compact_index_preserves_probe_and_cuts_files(spark):
+def test_compact_index_preserves_probe_and_cuts_files(spark, monkeypatch):
     """compact_index is the grow-index small-files story: after many
     appended batches (one flat delta file per relation per batch), a
     forced compaction must (a) fold every delta into its base and
     reduce the file count to the size-derived target, (b) leave probe
     results byte-identical, and (c) self-heal a crashed swap on the
     next call — both the base swap (live missing, __old present) and
-    the delta stage-aside (delta renamed aside, publish not reached)."""
+    the delta stage-aside (delta renamed aside, publish not reached).
+    The index is built at 8 parts, so a compaction that re-sizes it to
+    the tiny corpus's count (one part) is visible: after a rolled-back
+    swap the live base still carries its own count."""
     from spark_sql_perf_spark.catalog import table
     from spark_sql_perf_spark.pipeline.dedup import probe_with_index
     from spark_sql_perf_spark.streaming.dedup import (
-        build_probe_index,
         compact_index,
         grow_index_append,
         index_file_counts,
@@ -499,7 +502,7 @@ def test_compact_index_preserves_probe_and_cuts_files(spark):
 
     work = tempfile.mkdtemp(prefix="probe-compact-")
     index_dir = os.path.join(work, "index")
-    build_probe_index(spark, SF_DIR_TINY, index_dir)
+    build_index_at(spark, index_dir, 8)
 
     docs = table(spark, SF_DIR_TINY, "documents")
     # several grow batches -> one appended delta file per batch per relation
@@ -535,6 +538,45 @@ def test_compact_index_preserves_probe_and_cuts_files(spark):
     }
     assert any(v[1] >= 1 for v in want.values())  # matches grown docs
 
+    # a re-sizing compaction that crashes at its publish rename (the
+    # first relation's tmp -> base): the tmp holds the re-sized base,
+    # the delta and the live base are staged aside. recover_index rolls
+    # back to the original base, which must carry ITS count, so a
+    # pruned probe reduces its keys mod 8 and decides exactly as before
+    import shutil
+
+    from spark_sql_perf_spark import memo
+    from spark_sql_perf_spark.streaming import dedup
+
+    fs, Path = dedup._index_fs(spark, index_dir)
+
+    class FailPublish:
+        def rename(self, src, dst):
+            return not src.getName().endswith("__compact_tmp") and fs.rename(src, dst)
+
+        def __getattr__(self, name):
+            return getattr(fs, name)
+
+    monkeypatch.setattr(dedup, "_index_fs", lambda *_: (FailPublish(), Path))
+    with pytest.raises(IOError, match="could not publish"):
+        compact_index(spark, index_dir, max_files=0)
+    monkeypatch.undo()
+    assert dedup._recorded_parts(fs, Path, f"{index_dir}/hashed__compact_tmp") == 1
+    assert not os.path.exists(f"{index_dir}/hashed")
+    recover_index(spark, index_dir)
+    assert dedup._recorded_parts(fs, Path, f"{index_dir}/hashed") == 8
+    assert os.path.isdir(f"{index_dir}/hashed__delta")
+    assert not os.path.exists(f"{index_dir}/hashed__compact_tmp")
+    pruned, cand = dedup.probe_index_at_rest(spark, index_dir, probe)
+    try:
+        got0 = {
+            r["batch_id"]: tuple(r[c] for c in cols[1:])
+            for r in pruned.select(*cols).collect()
+        }
+    finally:
+        memo.release(cand)
+    assert got0 == want
+
     compacted = compact_index(spark, index_dir, max_files=0)  # force all
     after_files = index_file_counts(spark, index_dir)
     assert set(compacted) == {"hashed", "sigs", "bands"}
@@ -550,8 +592,6 @@ def test_compact_index_preserves_probe_and_cuts_files(spark):
     assert got == want  # probe results unchanged by compaction
 
     # crashed-swap recovery: live relation gone, __old holds the copy
-    import shutil
-
     shutil.move(f"{index_dir}/sigs", f"{index_dir}/sigs__old")
     compact_index(spark, index_dir, max_files=10**9)  # recovery-only pass
     assert os.path.isdir(f"{index_dir}/sigs")

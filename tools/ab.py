@@ -119,9 +119,13 @@ def report(spec: dict, runs: dict[str, list[dict | None]]) -> list[str]:
             continue
         sides = [spread([p[i] for p in pairs if p[i] is not None]) for i in (0, 1)]
         cells = [f"{med:.3f} [{q1:.3f}, {q3:.3f}]" for q1, med, q3 in sides]
+        delta = 100.0 * (sides[1][1] / sides[0][1] - 1.0)
         lines.append(f"{m['name']:16s} {cells[0]:>28s} {cells[1]:>28s}"
-                     f" {100.0 * (sides[1][1] / sides[0][1] - 1.0):+6.1f}%"
+                     f" {delta:+6.1f}%"
                      f" {wins:>2d}/{len(pairs):<2d}  {v}")
+        if m["name"] == "heap_retained_mb" and v == "better" and abs(delta) < 1.0:
+            lines.append(f"{'':16s} caveat: a heap_retained_mb `better` below 1% has"
+                         " read `better` on identical code; rerun with the sides swapped")
     lines.append(f"failed ops: base {failed['base']}, change {failed['change']}")
     return lines
 

@@ -2602,12 +2602,12 @@ def probe_r13(spark, n_docs: int = R13_N_DOCS) -> dict[str, float]:
     1. pruning by batch size — pruned vs full probe (min-of-2) at
        trickle/medium/saturating batches, with decisions asserted
        IDENTICAL row-for-row, plus the receipt: candidate partitions
-       hit (of _N_ID_PARTS) and hashed data files actually read (of
-       the relation's total). The trickle regime is the win (per-batch
-       index I/O was the fixed O(index) tax); at saturating batches
-       the parts saturate and pruned == full, which is the regime
-       where the scan amortizes over candidates anyway (stated, not
-       hidden).
+       hit (of the index's recorded id_part count) and hashed data
+       files actually read (of the relation's total). The trickle
+       regime is the win (per-batch index I/O was the fixed O(index)
+       tax); at saturating batches the parts saturate and pruned ==
+       full, which is the regime where the scan amortizes over
+       candidates anyway (stated, not hidden).
     2. accretion under the NEW layout — an append publishes one file
        per TOUCHED directory (not ~5 flat files as in the r12 cells),
        so file counts accrete faster; re-priced at 50/200 appended
@@ -2625,8 +2625,9 @@ def probe_r13(spark, n_docs: int = R13_N_DOCS) -> dict[str, float]:
     )
     from spark_sql_perf_spark.streaming.dedup import (
         _ID_PART,
-        _N_ID_PARTS,
         _id_part,
+        _index_fs,
+        _recorded_parts,
         compact_index,
         grow_index_append,
         index_file_counts,
@@ -2643,6 +2644,7 @@ def probe_r13(spark, n_docs: int = R13_N_DOCS) -> dict[str, float]:
         write_index_frames(index_dir, *_minhash_frames(idx))
         totals = index_file_counts(spark, index_dir)
         out["files_base"] = sum(totals.values())
+        n_id_parts = _recorded_parts(*_index_fs(spark, index_dir), f"{index_dir}/hashed")
 
         def read_full():
             return (
@@ -2688,12 +2690,14 @@ def probe_r13(spark, n_docs: int = R13_N_DOCS) -> dict[str, float]:
                 best_pruned = min(best_pruned, time.perf_counter() - t0)
                 cand_last = cand
                 parts_hit = (
-                    cand.select(_id_part("idx_id").alias("p")).distinct().count()
+                    cand.select(_id_part("idx_id", n_id_parts).alias("p"))
+                    .distinct()
+                    .count()
                 )
             assert got == want, f"pruned decisions diverged at batch={bs}"
             parts = [
                 r[0]
-                for r in cand_last.select(_id_part("idx_id").alias("p"))
+                for r in cand_last.select(_id_part("idx_id", n_id_parts).alias("p"))
                 .distinct()
                 .collect()
             ]
@@ -2709,7 +2713,7 @@ def probe_r13(spark, n_docs: int = R13_N_DOCS) -> dict[str, float]:
             out[f"pruned_s_{bs}"] = round(best_pruned, 2)
             out[f"parts_{bs}"] = parts_hit
             out[f"hashed_files_read_{bs}"] = files_read
-        out["n_id_parts"] = _N_ID_PARTS
+        out["n_id_parts"] = n_id_parts
         out["hashed_files_total"] = totals["hashed"]
 
         # --- accretion under the new layout ---
