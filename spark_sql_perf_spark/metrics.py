@@ -17,11 +17,14 @@ Two fidelity levels:
   O(n_subtrees x query cost): opt-in, like the reference's
   includeBreakdown flag.
 - `job_step(spark, name)` — names the Spark jobs a block launches, so
-  the status store can group a run's jobs by library step.
+  the status store can group a run's jobs by library step, and logs the
+  block's wall span at DEBUG, so a reader can split it into job-busy
+  and driver time.
 """
 
 from __future__ import annotations
 
+import logging
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
@@ -30,6 +33,7 @@ from typing import Any, Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 _JOB_DESCRIPTION = "spark.job.description"
+_log = logging.getLogger(__name__)
 
 
 @contextmanager
@@ -38,14 +42,18 @@ def job_step(spark: SparkSession, name: str) -> Iterator[None]:
     inside the block (a thread-local property: broadcast and AQE stage
     jobs inherit it), then restore the previous value. Inside a
     streaming ``foreachBatch`` the previous value is the engine's own
-    batch description, which must survive the step."""
+    batch description, which must survive the step. Logs ``name``,
+    start and end at DEBUG, in epoch seconds like the status store's job
+    times."""
     sc = spark.sparkContext
     previous = sc.getLocalProperty(_JOB_DESCRIPTION)
     sc.setLocalProperty(_JOB_DESCRIPTION, name)
+    start = time.time()
     try:
         yield
     finally:
         sc.setLocalProperty(_JOB_DESCRIPTION, previous)
+        _log.debug("job_step %s %.3f %.3f", name, start, time.time())
 
 
 @dataclass

@@ -140,6 +140,25 @@ def test_plan_normalizer_ignores_ids_only():
     assert ab.normalize_plan(smj) != ab.normalize_plan(other)
 
 
+def test_step_times_split_wall_into_busy_and_driver():
+    # one micro-batch over [100, 110]: step a with two overlapping jobs,
+    # step b with one, step c with none; a job outside every step; a
+    # step span and a job of the next batch, which do not count
+    steps = [("a", 101.0, 104.0), ("b", 105.0, 106.0), ("c", 107.0, 109.0),
+             ("a", 111.0, 112.0)]
+    jobs = [("a", 101.5, 103.0), ("a", 102.0, 103.5), ("b", 105.2, 105.7),
+            ("engine batch", 109.2, 109.6), ("a", 111.1, 111.9)]
+    rows = ab.step_times(steps, jobs, 100.0, 110.0)
+    assert set(rows) == {"a", "b", "c", ab.OUTSIDE}
+    want = {"a": (2, 3.0, 2.0, 1.0), "b": (1, 1.0, 0.5, 0.5), "c": (0, 2.0, 0.0, 2.0),
+            ab.OUTSIDE: (1, 4.0, 0.4, 3.6)}
+    for step, (n, wall, busy, driver) in want.items():
+        assert rows[step][0] == n, step
+        assert rows[step][1:] == pytest.approx((wall, busy, driver)), step
+    # every second of the batch is in exactly one row
+    assert sum(r[1] for r in rows.values()) == pytest.approx(10.0)
+
+
 @pytest.mark.parametrize("sub", ["pairs", "plan", "time", "oracle", "costs", "stages", "steps"])
 def test_subcommand_help_exits_zero(sub):
     proc = subprocess.run([sys.executable, os.path.join(TOOLS, "ab.py"), sub, "--help"],

@@ -10,6 +10,7 @@ import argparse
 import contextlib
 import difflib
 import json
+import logging
 import os
 import re
 import statistics
@@ -329,9 +330,50 @@ def stages(a: argparse.Namespace) -> None:
     spark.stop()
 
 
+OUTSIDE = "(outside every step)"
+
+
+def step_times(steps: list[tuple[str, float, float]], jobs: list[tuple[str, float, float | None]],
+               lo: float, hi: float) -> dict[str, tuple[int, float, float, float]]:
+    """One micro-batch [lo, hi]: {step: (jobs, wall, job-busy, driver = wall - busy)}, and
+    the same under OUTSIDE for the time outside every step. ``steps`` are job_step's
+    (name, start, end) spans; ``jobs`` are (description, submitted, completed or None)
+    spans, a step's jobs described by its name. Steps do not nest; times are epoch seconds."""
+    from perfbench.trace import union_length
+
+    walls: dict[str, list[tuple[float, float]]] = {}
+    for name, start, end in steps:
+        if start < hi and end > lo:
+            walls.setdefault(name, []).append((max(start, lo), min(end, hi)))
+    busy: dict[str, list[tuple[float, float]]] = {}
+    for name, start, end in jobs:
+        if lo <= start <= hi:
+            busy.setdefault(name if name in walls else OUTSIDE, []).append(
+                (start, min(end or hi, hi)))
+    inside = union_length([s for spans in walls.values() for s in spans])
+    wall = {name: union_length(spans) for name, spans in walls.items()}
+    wall[OUTSIDE] = hi - lo - inside
+    out = {}
+    for name, w in wall.items():
+        b = union_length(busy.get(name, []))
+        out[name] = (len(busy.get(name, [])), w, b, w - b)
+    return out
+
+
+class StepLog(logging.Handler):
+    """Collects job_step's DEBUG records as (name, start, end) spans."""
+
+    def __init__(self) -> None:
+        super().__init__(logging.DEBUG)
+        self.spans: list[tuple[str, float, float]] = []
+
+    def emit(self, record: logging.LogRecord) -> None:
+        self.spans.append(record.args)
+
+
 def steps(a: argparse.Namespace) -> None:
-    """One dedup_stream drain on the checkout: per micro-batch, the jobs and
-    job-busy seconds of each step (``spark.job.description``)."""
+    """One dedup_stream drain on the checkout: per micro-batch and step (job_step),
+    the jobs, wall, job-busy and driver seconds, and the time outside every step."""
     from perfbench.inputs import provision
     from perfbench.session import start_session, stop_session
     from perfbench.trace import Tracer, spark_activity, union_length
@@ -341,10 +383,14 @@ def steps(a: argparse.Namespace) -> None:
     state = os.path.join(ROOT, ".perfbench")
     manifest = provision(os.path.join(state, "inputs"), w.name, w.kind, w.params, a.seed)
     spark = start_session(ROOT)
+    log, step_log = logging.getLogger("spark_sql_perf_spark.metrics"), StepLog()
     try:
         show_conf(spark)
         w.setup(spark, manifest, os.path.join(state, "work", "ab-steps"), Tracer(False, "ab"))
+        log.addHandler(step_log)
+        log.setLevel(logging.DEBUG)
         ops = w.run_pass(spark, 0, Tracer(False, "ab")).ops
+        log.removeHandler(step_log)
         jobs = spark_activity(spark)["jobs"]
         store = spark.sparkContext._jsc.sc().statusStore()
         it = store.jobsList(spark.sparkContext._jvm.java.util.ArrayList()).iterator()
@@ -355,22 +401,21 @@ def steps(a: argparse.Namespace) -> None:
             names[j.jobId()] = d.get().splitlines()[0] if d.isDefined() else "(unnamed)"
     finally:
         stop_session(spark)
+    spans = [(names.get(j["jobId"], "(unnamed)"), j["submissionTime"], j["completionTime"])
+             for j in jobs if j["submissionTime"]]
     for op in ops:
         if op.error:
             print(f"\n{op.name}: FAILED {op.error.strip().splitlines()[-1]}")
             continue
         lo, hi = op.extra["start"], op.extra["start"] + op.latency_s
-        ran = [j for j in jobs if j["submissionTime"] and lo <= j["submissionTime"] <= hi]
-        by_step: dict[str, list[tuple[float, float]]] = {}
-        for j in ran:
-            span = (j["submissionTime"], j["completionTime"] or hi)
-            by_step.setdefault(names.get(j["jobId"], "(unnamed)"), []).append(span)
-        busy = union_length([s for spans in by_step.values() for s in spans])
+        ran = [(s, e or hi) for _, s, e in spans if lo <= s <= hi]
         kind = "compacting" if op.extra["compacted"] else "plain"
         print(f"\nmicro-batch {op.extra['batch_id']} ({op.name}, {kind}): wall {op.latency_s:.3f}s,"
-              f" {len(ran)} jobs, job-busy {busy:.3f}s")
-        for step, spans in sorted(by_step.items(), key=lambda kv: (-len(kv[1]), kv[0])):
-            print(f"  {step:28s} {len(spans):3d} jobs  {union_length(spans):7.3f}s")
+              f" {len(ran)} jobs, job-busy {union_length(ran):.3f}s")
+        print(f"  {'step':28s} {'jobs':>4s} {'wall':>7s} {'busy':>7s} {'driver':>7s}")
+        rows = step_times(step_log.spans, spans, lo, hi)
+        for step, (n, wall, busy, driver) in sorted(rows.items(), key=lambda kv: -kv[1][1]):
+            print(f"  {step:28s} {n:4d} {wall:7.3f} {busy:7.3f} {driver:7.3f}")
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -394,7 +439,7 @@ def main(argv: list[str] | None = None) -> int:
     sub.add_parser("costs", help="rewrite tools/query_costs.json in a driver-like session")
     p = sub.add_parser("stages", help="per-stage rows of each query's warm run")
     p.add_argument("queries", nargs="*", help="default: bench.HEADLINE")
-    p = sub.add_parser("steps", help="jobs and job-busy seconds per step of one dedup_stream drain")
+    p = sub.add_parser("steps", help="wall, job-busy and driver seconds per step of a dedup drain")
     p.add_argument("--seed", type=int, default=1)
     args = ap.parse_args(argv)
     if any("=" not in kv for kv in getattr(args, "conf", [])):

@@ -881,82 +881,6 @@ def patch_r7_section(res: dict[int, dict[str, float]]) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Session calibration (r9): the cross-era normalizer. The per-family
-# patch modes mean SCALE_PROBE.md accumulates tables measured in
-# different sessions, and this VM drifts 40-50% between sessions with
-# zero code changes (observed r7 -> r8) — so, like bench.py's
-# CALIBRATION median, every probe session measures one fixed memo-free
-# thermometer cell and records its ratio against a pinned reference.
-# Cells from different eras divide by their session's factor to compare.
-# ---------------------------------------------------------------------------
-
-CAL_ROWS = 64_000_000  # 16M measured 0.68s — too close to the fixed job
-# overhead to thermometer reliably; 64M puts the cell in whole seconds
-# (era, seconds): this exact cell's min-of-3 in the session that pinned
-# the reference. Re-pin only together with a same-session regeneration
-# of the tables it normalizes.
-CAL_REFERENCE = ("r9", 1.79)
-
-
-def probe_calibration(spark) -> float:
-    """The star_join_agg shape at a FIXED 16M rows, rebuilt from the
-    deterministic datagen every run (no persisted/memoized state, no
-    LSH checkpoints) — the closest thing the probe corpus has to a pure
-    box-drift thermometer. min-of-3 like bench.py's estimator."""
-    fact = gen_table(
-        spark, CAL_ROWS,
-        {
-            "dim_k": lambda idc: uniform_int(idc, "d", 1, 10_000),
-            "v": lambda idc: (uniform_int(idc, "v", 0, 1_000_000) / 100.0),
-        },
-    )
-    dim = gen_table(
-        spark, 10_000,
-        {"dim_k": lambda idc: idc + 1, "grp": lambda idc: idc % 50},
-    )
-    df = (fact.join(F.broadcast(dim), "dim_k").groupBy("grp")
-          .agg(F.sum(F.col("v").cast("decimal(18,2)")).alias("s")))
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 2)
-
-
-def calibration_section(measured: float) -> list[str]:
-    era, ref = CAL_REFERENCE
-    factor = measured / ref
-    return [
-        "## Session calibration (cross-era normalization)",
-        "",
-        "The per-family patch modes below accumulate tables measured in",
-        "DIFFERENT sessions, and this box drifts 40-50% between sessions",
-        "with zero code changes (observed r7 -> r8). Every probe session",
-        "therefore measures one fixed memo-free thermometer — the",
-        f"star_join_agg shape at {CAL_ROWS:,} rows, rebuilt from datagen,",
-        "min-of-3 — and records its ratio against the pinned reference.",
-        "To compare a cell across eras, divide it by its session's box",
-        "factor first; a table is single-era unless its text says",
-        "otherwise. Regenerate with: `python tools/scale_probe.py cal`",
-        "(every family mode also refreshes this section).",
-        "",
-        f"Latest session: {measured}s vs pinned {era} reference {ref}s —",
-        f"box factor {factor:.2f}.",
-        "",
-    ]
-
-
-def run_calibration(spark) -> float:
-    measured = probe_calibration(spark)
-    print(f"calibration star{CAL_ROWS // 1_000_000}M: {measured}s "
-          f"(factor {measured / CAL_REFERENCE[1]:.2f} vs {CAL_REFERENCE[0]})",
-          flush=True)
-    _patch_section("## Session calibration", calibration_section(measured))
-    return measured
-
-
-# ---------------------------------------------------------------------------
 # r9: ANN SERVING at volume (sim7 / streaming.ann / the at-rest layout).
 # The knn cells above cover the index BUILD; these cover the probe side.
 # ---------------------------------------------------------------------------
@@ -2010,7 +1934,6 @@ def main() -> None:
     print(f"rest512: {rest_res}", flush=True)
     d8_res = d8_cells(spark)
     c12_res = c12_cells(spark)
-    cal = probe_calibration(spark)
 
     time_keys = [
         k for k in results[SCALES[0]]
@@ -2026,7 +1949,6 @@ def main() -> None:
         "min-of-2 (a one-shot 64M cell can catch a GC/disk hiccup and",
         "misreport by 2-3x).",
         "",
-        *calibration_section(cal),
         "| rows | " + " | ".join(time_keys) + " |",
         "|---|" + "---|" * len(time_keys),
     ]
@@ -2181,7 +2103,10 @@ def _r12_probe_batch(spark, idx, n_docs: int, n_batch: int = 8192):
     """probe_r11's fixed batch (half near-dups of index docs, half
     disjoint-vocab novels), over an explicit (id, text) index frame."""
     half = n_batch // 2
-    near = idx.where(F.col("id") % (n_docs // half) == 0).limit(half).select(
+    # every max(1, n_docs // half)-th index doc: all of them when the
+    # index holds fewer docs than the half batch
+    stride = max(1, n_docs // half)
+    near = idx.where(F.col("id") % stride == 0).limit(half).select(
         (F.col("id") + n_docs).alias("id"),
         F.concat("text", F.lit(" probe batch suffix")).alias("text"),
     )
@@ -2625,6 +2550,7 @@ def probe_r13(spark, n_docs: int = R13_N_DOCS) -> dict[str, float]:
     )
     from spark_sql_perf_spark.streaming.dedup import (
         _ID_PART,
+        _delta_dir,
         _id_part,
         _index_fs,
         _recorded_parts,
@@ -2719,26 +2645,20 @@ def probe_r13(spark, n_docs: int = R13_N_DOCS) -> dict[str, float]:
         # --- accretion under the new layout ---
         batch = _r12_probe_batch(spark, idx, n_docs)
         novels = batch.where(F.col("id") >= 2 * n_docs).limit(512)
-        before = {
-            rel: set(
+
+        def delta_files(rel):
+            # appends land in the relation's flat __delta sidecar
+            return {
                 os.path.join(dp, f)
-                for dp, _, fs_ in os.walk(f"{index_dir}/{rel}")
+                for dp, _, fs_ in os.walk(_delta_dir(index_dir, rel))
                 for f in fs_
                 if not f.startswith(("_", "."))
-            )
-            for rel in ("hashed", "sigs", "bands")
-        }
+            }
+
+        before = {rel: delta_files(rel) for rel in ("hashed", "sigs", "bands")}
         grow_index_append(spark, index_dir, novels)
         template = {
-            rel: sorted(
-                set(
-                    os.path.join(dp, f)
-                    for dp, _, fs_ in os.walk(f"{index_dir}/{rel}")
-                    for f in fs_
-                    if not f.startswith(("_", "."))
-                )
-                - before[rel]
-            )
+            rel: sorted(delta_files(rel) - before[rel])
             for rel in ("hashed", "sigs", "bands")
         }
         out["files_per_append"] = sum(len(v) for v in template.values())
@@ -2897,61 +2817,51 @@ def patch_r13_loop_section(res: dict[str, float]) -> None:
 
 
 if __name__ == "__main__":
-    # every family mode also measures + patches the session calibration
-    # cell, so any table added to SCALE_PROBE.md carries its box era
     mode = sys.argv[1] if len(sys.argv) > 1 else None
     if mode == "pq":
         spark = build_session("scale-probe-pq")
         spark.sparkContext.setLogLevel("ERROR")
         # no separate warmup: min-of-2 absorbs JIT in the 1M cell's first shot
-        run_calibration(spark)
         patch_pq_section(pq_cells(spark))
         spark.stop()
     elif mode == "r6":
         spark = build_session("scale-probe-r6")
         spark.sparkContext.setLogLevel("ERROR")
-        run_calibration(spark)
         patch_r6_section(r6_cells(spark))
         spark.stop()
     elif mode == "r8":
         spark = build_session("scale-probe-r8")
         spark.sparkContext.setLogLevel("ERROR")
-        run_calibration(spark)
         probe_r8(spark, 100_000)  # untimed warmup: JIT + codegen
         patch_r8_section(r8_cells(spark))
         spark.stop()
     elif mode == "r7":
         spark = build_session("scale-probe-r7")
         spark.sparkContext.setLogLevel("ERROR")
-        run_calibration(spark)
         probe_r7(spark, 100_000)  # untimed warmup: JIT + codegen for all shapes
         patch_r7_section(r7_cells(spark))
         spark.stop()
     elif mode == "r9":
         spark = build_session("scale-probe-r9")
         spark.sparkContext.setLogLevel("ERROR")
-        run_calibration(spark)
         probe_r9(spark, 100_000)  # untimed warmup: JIT + codegen
         patch_r9_section(r9_cells(spark))
         spark.stop()
     elif mode == "d8":
         spark = build_session("scale-probe-d8")
         spark.sparkContext.setLogLevel("ERROR")
-        run_calibration(spark)
         probe_d8(spark, 100_000)  # untimed warmup: JIT + codegen
         patch_d8_section(d8_cells(spark))
         spark.stop()
     elif mode == "c12":
         spark = build_session("scale-probe-c12")
         spark.sparkContext.setLogLevel("ERROR")
-        run_calibration(spark)
         probe_c12(spark, 200_000)  # untimed warmup: JIT + codegen
         patch_c12_section(c12_cells(spark))
         spark.stop()
     elif mode == "rest512":
         spark = build_session("scale-probe-rest512")
         spark.sparkContext.setLogLevel("ERROR")
-        run_calibration(spark)
         probe_r9(spark, 100_000)  # untimed warmup: JIT + codegen
         r9_8m = probe_r9(spark, 8_000_000)  # fresh same-session 64-part row
         print(f"r9@8M (nparts=64): {r9_8m}", flush=True)
@@ -2962,14 +2872,12 @@ if __name__ == "__main__":
     elif mode == "r11":
         spark = build_session("scale-probe-r11")
         spark.sparkContext.setLogLevel("ERROR")
-        run_calibration(spark)
         probe_r11(spark, 100_000)  # untimed warmup: JIT + codegen
         patch_r11_section(r11_cells(spark))
         spark.stop()
     elif mode == "r12":
         spark = build_session("scale-probe-r12")
         spark.sparkContext.setLogLevel("ERROR")
-        run_calibration(spark)
         probe_r12(spark, 200_000)  # untimed warmup: JIT + codegen
         res = probe_r12(spark)
         print(f"r12: {res}", flush=True)
@@ -2978,7 +2886,6 @@ if __name__ == "__main__":
     elif mode == "r12loop":
         spark = build_session("scale-probe-r12loop")
         spark.sparkContext.setLogLevel("ERROR")
-        run_calibration(spark)
         res = probe_r12_loop(spark)
         print(f"r12loop: {res}", flush=True)
         patch_r12_loop_section(res)
@@ -2986,7 +2893,6 @@ if __name__ == "__main__":
     elif mode == "r13":
         spark = build_session("scale-probe-r13")
         spark.sparkContext.setLogLevel("ERROR")
-        run_calibration(spark)
         probe_r13(spark, 200_000)  # untimed warmup: JIT + codegen
         res = probe_r13(spark)
         print(f"r13: {res}", flush=True)
@@ -2995,16 +2901,9 @@ if __name__ == "__main__":
     elif mode == "r13loop":
         spark = build_session("scale-probe-r13loop")
         spark.sparkContext.setLogLevel("ERROR")
-        run_calibration(spark)
         res = probe_r12_loop(spark)
         print(f"r13loop: {res}", flush=True)
         patch_r13_loop_section(res)
-        spark.stop()
-    elif mode == "cal":
-        spark = build_session("scale-probe-cal")
-        spark.sparkContext.setLogLevel("ERROR")
-        probe_calibration(spark)  # untimed-in-effect warmup shot
-        run_calibration(spark)
         spark.stop()
     else:
         main()
